@@ -19,18 +19,23 @@ import org.apache.spark.sql.SparkSession
   * layout…), so changing a pipeline constant invalidates its indexes
   * automatically instead of relying on someone remembering to bump the
   * shared code [[Version]].
+  *
+  * Build invariant: a generation is written — and [[gcStale]] run —
+  * only when its fingerprint directory lacks `_SUCCESS` ([[buildOnce]]);
+  * every other call serves the generation already on disk. The params
+  * string is the content contract: two calls that resolve to the same
+  * directory must be able to serve each other's bytes.
   */
 object AtRest {
   /** Bump to invalidate every at-rest index after a cross-cutting
     * pipeline change not captured by an index's own params string. */
   val Version = 1
 
-  /** BUILD-EVENT log: every at-rest build job calls [[gcStale]] after a
-    * successful write, so recording the index family there gives an
-    * exact "was any index BUILT (vs read) in this window" signal. Bench
-    * drains it per timed rep — a query whose slow rep coincides with a
-    * build event is paying index construction, not its own plan (the
-    * q_dedup_eval-oscillation diagnosis from round 11). */
+  /** BUILD-EVENT log: every at-rest write calls [[gcStale]] after it
+    * succeeds, so recording the index family there gives an exact "was
+    * any index BUILT (vs read) in this window" signal. Bench drains it
+    * per timed rep — a query whose slow rep coincides with a build event
+    * is paying index construction, not its own plan. */
   private val buildLog = new java.util.concurrent.ConcurrentLinkedQueue[String]
   private[graft] def drainBuildEvents(): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -140,6 +145,24 @@ object AtRest {
     restoreCrashedSwap(dir)
     new java.io.File(dir, "_SUCCESS").isFile
   }
+
+  /** The single build-if-absent primitive: when any of `dirs` lacks its
+    * `_SUCCESS`, run `write` (which must produce every one of them), then
+    * [[gcStale]] each; otherwise do nothing. Double-checked under one
+    * JVM monitor per directory (taken in canonical-path order, so
+    * builders of overlapping directory sets cannot deadlock): concurrent
+    * callers of one generation wait for the first builder and then
+    * serve its output, while builds of unrelated generations proceed in
+    * parallel. */
+  def buildOnce(dirs: java.io.File*)(write: => Unit): Unit = {
+    def built = dirs.forall(isBuilt)
+    def locked(keys: List[String]): Unit = keys match {
+      case k :: rest => buildMonitors.computeIfAbsent(k, _ => new Object).synchronized(locked(rest))
+      case Nil => if (!built) { write; dirs.foreach(gcStale) }
+    }
+    if (!built) locked(dirs.map(f => monitorKey(f.getPath)).distinct.sorted.toList)
+  }
+  private val buildMonitors = new java.util.concurrent.ConcurrentHashMap[String, Object]
 
   /** Hive-partitioned write that stays READABLE when the relation is
     * EMPTY: `partitionBy` of zero rows emits no data files at all, and a

@@ -48,7 +48,56 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** Parquet read that infers the schema once per (path, file listing,
+    * inference confs) and reads with `.schema(...)` after that. Inference
+    * is a Spark job (footer reads plus partition discovery) that a table
+    * read would otherwise pay on every call; the supplied-schema read
+    * starts none and yields the same relation, partition columns
+    * included. The key pins everything the inferred schema depends on:
+    * the recursive listing's (name, length, mtime) — a file rewritten at
+    * the same path re-infers — and every session conf that changes
+    * inference. One entry per path; a changed key replaces it. A path
+    * that cannot be listed is read by inference, which raises the usual
+    * analysis error for a missing path. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = inferenceKey(spark, path)
+    Option(schemas.get(path)).filter(e => key.contains(e._1)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => schemas.put(path, (k, df.schema)))
+        df
+    }
+  }
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  private def inferenceKey(spark: SparkSession, path: String): Option[String] = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    val confs = inferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
+    try {
+      val files = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+      val listing = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (files.hasNext) {
+        val f = files.next()
+        listing += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+      Some(listing.sorted.mkString(confs + "|", "|", ""))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -230,16 +230,15 @@ object Scale {
     * pre-write repartition). Partitioning by the dominant filter/join
     * column is the other half of the 100 TB layout story: a query that
     * touches 3 of 84 months must read 3/84ths of the bytes. */
-  def monthPartitionedLineitem(s: SparkSession, d: String): String = synchronized {
+  def monthPartitionedLineitem(s: SparkSession, d: String): String = {
     val dir = AtRest.dir(s, d, "lineitem_bymonth", "lineitem",
       params = "partitionBy=ship_month(yyyy-MM)")
-    if (!AtRest.isBuilt(dir)) {
+    AtRest.buildOnce(dir) {
       AtRest.writePartitioned(
         Tables.lineitem(s, d)
           .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
           .repartition(col("ship_month")),
         "ship_month", dir.getAbsolutePath)
-      AtRest.gcStale(dir)
     }
     dir.getAbsolutePath
   }
@@ -254,7 +253,7 @@ object Scale {
     * join-driven analogue of q_zonemap_prune's static skipping. */
   def qDppPrune(s: SparkSession, d: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 2)
-    val fact = s.read.parquet(monthPartitionedLineitem(s, d))
+    val fact = Tables.readParquet(s, monthPartitionedLineitem(s, d))
     val dim = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT" && year(col("o_orderdate")) === 1996)
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("ship_month"))
@@ -319,17 +318,6 @@ object Scale {
     folded.select(target.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
-  /** Double-checked build-once for an at-rest generation: first caller
-    * writes + GCs, everyone else sees the completed `_SUCCESS`. */
-  private[graft] def buildOnce(dir: java.io.File)(write: => Unit): Unit =
-    if (!AtRest.isBuilt(dir)) synchronized {
-      if (!AtRest.isBuilt(dir)) {
-        write
-        AtRest.gcStale(dir)
-        ()
-      }
-    }
-
   /** Ingest cutoff for the MV refresh lifecycle: rows shipped before it
     * are the stored HISTORY generation, rows at/after it the delta. */
   private[graft] val MvCutoff = "1996-01-01"
@@ -345,7 +333,7 @@ object Scale {
   private[graft] def mvHistAtRest(s: SparkSession, d: String): String = {
     val histDir = AtRest.dir(s, d, "mv_lineitem_rollup_hist", "lineitem",
       params = s"$MvParams;hist<$MvCutoff")
-    buildOnce(histDir) {
+    AtRest.buildOnce(histDir) {
       mvPartialsOf(Tables.lineitem(s, d).where(col("l_shipdate") < MvCutoff))
         .write.mode("overwrite").parquet(histDir.getAbsolutePath)
     }
@@ -371,7 +359,7 @@ object Scale {
     * not a self-rewritten scan. */
   private[graft] def installMv(s: SparkSession, d: String): Unit = {
     val dir = mvServingDir(s, d)
-    buildOnce(dir) {
+    AtRest.buildOnce(dir) {
       graft.plans.MvRewrite.uninstall(s, "mv_lineitem_rollup")
       val stored = s.read.parquet(mvHistAtRest(s, d))
       val delta = mvPartialsOf(
@@ -503,13 +491,13 @@ object Scale {
   private[graft] def installMvOrders(s: SparkSession, d: String): Unit = {
     val histDir = AtRest.dir(s, d, "mv_orders_rollup_hist", "orders",
       params = s"$MvOrdersParams;hist<$MvCutoff")
-    buildOnce(histDir) {
+    AtRest.buildOnce(histDir) {
       mvOrdersPartialsOf(Tables.orders(s, d).where(col("o_orderdate") < MvCutoff))
         .write.mode("overwrite").parquet(histDir.getAbsolutePath)
     }
     val dir = AtRest.dir(s, d, "mv_orders_rollup", "orders",
       params = s"$MvOrdersParams;built=hist+delta")
-    buildOnce(dir) {
+    AtRest.buildOnce(dir) {
       graft.plans.MvRewrite.uninstall(s, "mv_orders_rollup")
       val stored = s.read.parquet(histDir.getAbsolutePath)
       val delta = mvOrdersPartialsOf(
@@ -646,7 +634,7 @@ object Scale {
     * fold — never a history re-scan; generations are
     * fingerprint-invalidated and gcStale'd like every at-rest index. */
   def qMvIncrRefresh(s: SparkSession, d: String): DataFrame = {
-    val stored = s.read.parquet(mvHistAtRest(s, d))
+    val stored = Tables.readParquet(s, mvHistAtRest(s, d))
     val delta = mvPartialsOf(
       Tables.lineitem(s, d).where(col("l_shipdate") >= MvCutoff))
     mvFoldPartials(Seq(stored, delta))

@@ -653,51 +653,55 @@ object Similarity {
     * inverted lists, here a cid-keyed parquet) — then every search
     * session loads centroids (k rows → broadcast), assigns its queries
     * to probe cells, and scans ONLY the matching index partitions.
-    * This build job always rebuilds: train → write centroids parquet →
-    * write assignments parquet, then answer the standard query set FROM
-    * the index read back off disk. Oracle = q_sim_ivf's from-scratch
-    * SQL, so the persisted-index search is proven byte-identical to the
-    * train-inline form — floats and all (the parquet double round-trip
-    * is exact; ranking ties break on c_id).
+    * Ensure built ([[buildIvfAtRest]]), then serve: the query vectors
+    * come straight from the embeddings table and everything else is
+    * read off disk — no retraining, no persisted corpus. Oracle =
+    * q_sim_ivf's from-scratch SQL, so the persisted-index search is
+    * proven byte-identical to the train-inline form — floats and all
+    * (the parquet double round-trip is exact; ranking ties break on
+    * c_id).
     *
-    * Scale shape: identical to q_sim_ivf's search phase, plus two
-    * writes — and the assignment relation is PARTITIONED BY cid on
-    * disk (`.partitionBy("cid")`, FAISS's inverted-list files), so the
+    * Scale shape: identical to q_sim_ivf's search phase — and the
+    * assignment relation is PARTITIONED BY cid on disk
+    * (`.partitionBy("cid")`, FAISS's inverted-list files), so the
     * probed-cell predicate ivfSearch pushes down becomes a storage-layer
     * PartitionFilter: a search session — batch or a streaming
     * annQuerySink tick — opens only its probed cells' files, the
     * O(batch × probed cells) contract the at-rest design exists for.
     * PlanShapeSpec asserts the pruned scan shape. */
   def qSimIvfAtRest(s: SparkSession, d: String): DataFrame = {
-    val e = buildIvfAtRest(s, d)
-    val (cellsDir, centsDir) = ivfIndexDirs(s, d)
-    // ---- search session: everything below reads the index from disk
-    val centsAtRest = s.read.parquet(centsDir.toString)
-    val cellsAtRest = s.read.parquet(cellsDir.toString)
-    ivfSearch(cellsAtRest, centsAtRest, e.filter(col("vec_id") % 20 === 0))
+    val (cellsDir, centsDir) = buildIvfAtRest(s, d)
+    val queries = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
+      .filter(col("vec_id") % 20 === 0)
+    ivfSearch(Tables.readParquet(s, cellsDir.toString),
+      Tables.readParquet(s, centsDir.toString), queries)
   }
 
-  /** The IVF index-build job (always rebuilds): train → write centroids
-    * parquet → write cid-partitioned assignments parquet → GC stale
-    * generations. Returns the persisted corpus relation for callers
-    * that go on to search. */
-  private def buildIvfAtRest(s: SparkSession, d: String): DataFrame = {
+  /** Ensure the IVF index is at rest and return its (cells, cents)
+    * directories. The two artifacts are one generation: the cells are
+    * assigned against exactly those centroids, so both are rebuilt —
+    * train → centroids parquet ∥ cid-partitioned assignments parquet →
+    * GC stale generations — only when either fingerprint lacks
+    * `_SUCCESS`, and served as they are otherwise. */
+  private def buildIvfAtRest(s: SparkSession, d: String): (java.io.File, java.io.File) = {
     graft.functions.VectorFunctions.register(s)
-    val (cellsDir, centsDir) = ivfIndexDirs(s, d)
-    val e = graft.CacheTracker.track(Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val centLit = ivfCentroidsLit(e, k = ivfKOf(s, d))
-    // the two index artifacts land in different directories and both
-    // derive from the already-collected centroid literal — write them
-    // from two driver threads (guide §2.6) so the tiny centroid write's
-    // job+commit latency hides inside the corpus assignment write
-    graft.awaitBoth(
-      () => centLit.write.mode("overwrite").parquet(centsDir.toString),
-      () => graft.AtRest.writePartitioned(assignCells(e, centLit, 1)
-        .select(col("vec_id").as("c_id"), col("cid"), col("ce")), "cid", cellsDir.toString))
-    graft.AtRest.gcStale(cellsDir); graft.AtRest.gcStale(centsDir)
-    e
+    val dirs @ (cellsDir, centsDir) = ivfIndexDirs(s, d)
+    graft.AtRest.buildOnce(cellsDir, centsDir) {
+      val e = graft.CacheTracker.track(Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val centLit = ivfCentroidsLit(e, k = ivfKOf(s, d))
+      // the two index artifacts land in different directories and both
+      // derive from the already-collected centroid literal — write them
+      // from two driver threads (guide §2.6) so the tiny centroid write's
+      // job+commit latency hides inside the corpus assignment write
+      graft.awaitBoth(
+        () => centLit.write.mode("overwrite").parquet(centsDir.toString),
+        () => graft.AtRest.writePartitioned(assignCells(e, centLit, 1)
+          .select(col("vec_id").as("c_id"), col("cid"), col("ce")), "cid", cellsDir.toString))
+    }
+    dirs
   }
 
   /** INCREMENTAL maintenance of the at-rest IVF index — the ANN face of
@@ -832,10 +836,8 @@ object Similarity {
     * retraining after distribution drift. Exact integers until the
     * final ratios. */
   def qIvfBalance(s: SparkSession, d: String): DataFrame = {
-    val (cellsDir, centsDir) = ivfIndexDirs(s, d)
-    if (!graft.AtRest.isBuilt(centsDir) || !graft.AtRest.isBuilt(cellsDir))
-      buildIvfAtRest(s, d)
-    val cells = s.read.parquet(cellsDir.toString)
+    val (cellsDir, _) = buildIvfAtRest(s, d)
+    val cells = Tables.readParquet(s, cellsDir.toString)
     // k is the CONFIGURED cell count (the shared ivfKOf derivation the
     // quantizer was built with, which the oracle computes by the same
     // bit-length form) — not the centroid parquet's row count: a Lloyd

@@ -824,12 +824,11 @@ object TextAnalysis {
       params = "char-trigram;mle;asc-count-fold;round6")
   private[graft] def lmXentAtRest(s: SparkSession, d: String): DataFrame = {
     val dir = lmXentDir(s, d)
-    if (!graft.AtRest.isBuilt(dir)) {
+    graft.AtRest.buildOnce(dir) {
       qLmPerplexity(s, d).select(col("doc_id"), col("n_grams"), col("xent"))
         .write.mode("overwrite").parquet(dir.toString)
-      graft.AtRest.gcStale(dir)
     }
-    s.read.parquet(dir.toString)
+    Tables.readParquet(s, dir.toString)
   }
 
   /** Gopher-style document quality rules (public heuristics from the

@@ -110,6 +110,40 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("vector kernels: a NULL element yields NULL in codegen and interpreted eval, like the HOF fold") {
+    graft.functions.VectorFunctions.register(spark)
+    // arrays derived from the row, so neither constant folding nor a
+    // local-relation rewrite evaluates the kernels at plan time
+    def out = spark.range(2).selectExpr(
+        "id",
+        "array(CAST(id * 3 AS DOUBLE), IF(id = 0, CAST(NULL AS DOUBLE), 4.0D)) AS x",
+        "array(0.0D, CAST(id * 5 AS DOUBLE)) AS y",
+        "array(id * 3, IF(id = 0, CAST(NULL AS BIGINT), 4L)) AS xl",
+        "array(0L, id * 5) AS yl")
+      .selectExpr("id", "cosine_sim(x, y)", "cosine_sim(y, x)", "dot_d(x, y)", "dot_d(y, x)",
+        "dot_l(xl, yl)", "dot_l(yl, xl)", "sqdist_d(x, y)", "sqdist_d(y, x)",
+        "aggregate(zip_with(x, y, (a, b) -> a * b), 0D, (acc, v) -> acc + v)")
+      .orderBy("id").collect()
+    val modes = Seq(
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes) {
+      val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val rows = try out finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      // row 0: x and xl hold a NULL element — every kernel and the HOF are NULL
+      assert((1 until rows(0).length).forall(rows(0).isNullAt), s"$mode: ${rows(0)}")
+      // row 1: x = [3, 4], y = [0, 5]
+      assert(rows(1).toSeq.tail == Seq(0.8, 0.8, 20.0, 20.0, 20L, 20L, 10.0, 10.0, 20.0),
+        s"$mode: ${rows(1)}")
+    }
+  }
+
   test("shingles: NULL words-array elements are skipped, matching the concat_ws HOF form") {
     withExtSession { s2 =>
       import s2.implicits._

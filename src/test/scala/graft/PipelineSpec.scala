@@ -27,7 +27,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pairs at rest: build-once parquet round-trip equals the fresh pipeline exactly") {
-    val atRest = Dedup.qDedupPairsAtRest(spark, sf) // force rebuild + read back
+    val atRest = Dedup.qDedupPairsAtRest(spark, sf) // ensure built, then read back from rest
     val fresh = Dedup.qDedupLshPairs(spark, sf) // deliberately index-free
     try {
       assert(atRest.exceptAll(fresh).isEmpty, "at-rest rows missing from fresh")

@@ -5,6 +5,7 @@
 # the whole round went unverified.)
 #
 #   tools/preflight.sh            # compile + tests + sf0.001 Verify + oracle check
+#                                 # + the benchmark helpers' unit tests
 #   tools/preflight.sh --fast     # skip the ScalaTest suite (~3 min saved)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -19,4 +20,5 @@ sbt -batch "set Compile/run/fork := true; runMain graft.Verify /root/testdata/sf
 python3 tools/check.py "$OUT" /root/testdata/sf0.001 | tail -3
 python3 tools/lint_oracle_types.py "$OUT" /root/testdata/sf0.001
 python3 tools/dialect_lab.py --selftest
+python3 -m unittest discover -s perfbench -p 'test_*.py'
 echo "PREFLIGHT OK — safe to commit the snapshot"
