@@ -1,112 +1,78 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
-/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
-  * prints ONE compact JSON line (the only stdout output).
+/** Benchmark main: times every registered query (or the `SPARK_GRAFT_ONLY`
+  * selection) at SPARK_GRAFT_SF_DIR and prints ONE compact JSON line, its
+  * only stdout output.
   *
-  * Each query is materialized through the `noop` datasource sink rather
-  * than `.count()`: under a count Catalyst prunes every unreferenced
-  * column, so projection-heavy queries (string/math/text ops) would be
-  * timed as bare scans. The noop sink evaluates the full result rows and
-  * discards them — the honest cost, with no disk in the measurement.
+  * Each query runs [[REPS]] timed reps through [[Harness.timedRep]] (noop
+  * sink, release after the clock) and reports the MEDIAN; the total is the
+  * sum of medians. One GC or first-touch pause in a shared JVM can inflate
+  * a single rep ~10×, so a single shot is not a per-query number.
   *
-  * Each query runs REPS=3 times after the session warmup and the
-  * per-query MEDIAN is reported (total = sum of medians): single-shot
-  * timing in a shared JVM let one GC/first-touch pause inflate whichever
-  * query it landed on by ~10x, making per-query numbers noise (round-3
-  * finding — q_gw_route reported 11.9s, re-timed 0.67s).
+  * Before EVERY rep, outside the clock, a GC fence (System.gc, a short
+  * sleep, and a wait until the task counters stop moving) pays the
+  * collector debt left by the previous rep, so a neighbour's cache churn
+  * is not collected inside this rep's measurement.
   *
-  * A SparkListener additionally accumulates shuffle-write bytes and
-  * spill (memory+disk) per task; the per-run delta gives each query a
-  * scale signature beyond wall time, emitted for the slowest queries as
-  * `"shuffle_kb":{q:[shuffle_kb,spill_kb]}`.
+  * Around each rep a SparkListener adds shuffle-write and spill bytes, and
+  * the GC MXBeans and janino counter add GC ms and compilations: a row
+  * that is slow WITH high gc/compile counts is environment-inflated, one
+  * without them is intrinsically slow.
   *
-  * The JSON line is kept short (3-decimal seconds, length-capped query
-  * map, slowest first) so the driver's bounded output-tail capture always
-  * holds the complete line; `value` still totals ALL queries, and any
-  * entries dropped from the map are counted in `omitted`.
+  * The stdout line is capped (3-decimal seconds, length-capped query map,
+  * failures then slowest first) so a reader that keeps only a 2000-char
+  * output tail always holds the complete line; `value` totals ALL queries and
+  * entries dropped from the map are counted in `omitted`. The complete
+  * per-row attribution goes to `bench_attr.json`.
   *
-  * The COMPLETE per-query attribution — secs, shuffle/spill KB, GC ms,
-  * janino compilations for EVERY row, not just the slowest 10 — is
-  * written to `bench_attr.json` beside the build (committed per round),
-  * so a mid-pack regression self-explains without a builder re-time;
-  * the stdout line stays bounded and carries a pointer to it.
-  *
-  * HOST-SPEED CANARY (round 15): the warmup query is re-timed solo
-  * (median-of-3, same hygiene) before the suite, every 60 queries
-  * during it, and once after — `host_factor` = median(those medians) /
-  * the committed quiet-host reference ([[canaryRef]]), and every row in
-  * bench_attr.json is stamped with the canary median in effect when it
-  * ran. Two rounds running, the single biggest judging cost was
-  * separating host-window contention from real regressions (r14: the
-  * SAME tree read 282.6 s in the driver window vs 240.9 s quiet); a
-  * factor ≳1.3 now marks the artifact itself as a hot window, and the
-  * per-row stamps localize WHICH rows the contention overlapped.
+  * HOST-SPEED CANARY: the warmup query is re-timed solo (median of 3,
+  * same fence) before the suite, every [[CANARY_EVERY]] queries during
+  * it, and once after. `host_factor` = median(canary medians) /
+  * [[canaryRef]]; a factor ≳1.3 marks the run as taken in a contended
+  * window, and each bench_attr row carries the canary median in effect
+  * when it ran, so the drift is localized to the rows it overlapped.
   */
 object Bench {
   private val REPS = 3
 
-  /** HOST-SPEED CANARY (r14 verdict item 2): the committed QUIET-HOST
-    * solo median of the canary query (q1_pricing_summary, the warmup)
-    * per corpus tier, measured with this same Bench hygiene
-    * (gc+quiesce before each rep, noop sink, median-of-3) on an
-    * otherwise-idle host. Every bench run re-times the canary before
-    * the suite and every [[CANARY_EVERY]] queries during it, and the
-    * emitted `host_factor` = median(canary medians) / this reference —
-    * so a driver artifact taken in a contended window SELF-DESCRIBES
-    * (factor ≳1.3 = hot host; per-row stamps localize the drift)
-    * instead of demanding a forensic same-window A/B against an old
-    * tree (two rounds of judging cost, r13/r14). Unknown tiers emit
-    * factor -1 (no reference, never a guess). */
   private val CANARY_EVERY = 60
   private val CANARY_QUERY = "q1_pricing_summary"
+  /** Quiet-host solo median of the canary per corpus tier, measured with
+    * this same protocol (fence before each rep, noop sink, median of 3).
+    * The reference must come from the protocol it divides: a canary rep
+    * starts cold behind the fence, so its quiet median sits ~30 % above
+    * the same query's warm in-suite row. The small tiers are dev-loop
+    * only and coarse (fixed session overheads dominate). Unknown tiers
+    * emit factor -1: no reference, never a guess. */
   private val canaryRef: Map[String, Double] = Map(
-    // Canary-PROTOCOL medians on a quiet host, measured round 15
-    // (SURVEY round-15 addendum records the protocol + raw readings).
-    // The reference must come from the same protocol it divides: a
-    // canary rep starts cold behind the JMH-style gc fence, so its
-    // quiet median (sf0.1: 1.16 and 1.13 across two full quiet runs)
-    // sits ~30% above the same query's warm IN-SUITE row median
-    // (0.84-0.85) — referencing the row floor would brand every quiet
-    // run ~1.3x hot. The small tiers are dev-loop only and coarse:
-    // fixed session overheads dominate their canary.
     "sf0.001" -> 0.30,
     "sf0.01" -> 0.35,
     "sf0.1" -> 1.10)
 
-  /** Per-row environment-inflation verdict (r15 verdict item 3): the
-    * round-15 calibration datapoint — a 356 s run whose canary read a
-    * quiet 1.10 — proved `host_factor` alone senses WINDOW contention,
-    * not heavy-row-local GC/build inflation; a reader had to compose
-    * host_factor + per-row gc/compiles/atrest_built + rep patterns by
-    * hand. This composes them mechanically, so a driver artifact
-    * adjudicates its own hot rows. A row is SUSPECT when any of:
+  /** Per-row environment-inflation verdict, composed from one row's
+    * already-collected signals so a bench artifact adjudicates its own
+    * hot rows. A row is SUSPECT when any of:
     *
     *   - "gc": GC time averaged per rep exceeds half the median rep
     *     wall time — the measurement is collector-dominated, usually
     *     debt inherited from cache-churning neighbors.
     *   - "settle": the FIRST rep ran ≥2× the median with the later
     *     reps settled (max of the rest within 1.5× of the median) —
-    *     the classic cold-entry pattern (codegen/index/page-cache
-    *     first-touch), not steady-state cost. The median itself is
-    *     sound, so this marks the row explainable, not wrong.
-    *   - "built": an at-rest index build was paid inside a timed rep —
-    *     the r11 q_dedup_eval oscillation class.
+    *     the cold-entry pattern (codegen/index/page-cache first-touch),
+    *     not steady-state cost. The median itself is sound, so this
+    *     marks the row explainable, not wrong.
+    *   - "built": an at-rest index build was paid inside a timed rep.
     *   - "disperse": the reps scatter by more than 2× (max/min, with a
     *     0.05 s noise floor on the min) WITHOUT the settle pattern
     *     explaining it — ambient contention landed inside the timed
-    *     window and even the median is untrustworthy. The r16 blind
-    *     spot this closes: q_lexical_diversity reps [15.9, 6.6, 19.0] —
-    *     first rep == median so "settle" can't fire, gc share 3 %, flag
-    *     EMPTY, yet a quiet re-time read 0.32 s (~50× ambient noise).
-    *     A settled cold entry stays "settle"-only: there the median IS
-    *     sound, so branding it disperse would dilute the signal.
+    *     window and even the median is untrustworthy (e.g. reps
+    *     [15.9, 6.6, 19.0] whose quiet re-time read 0.32 s). A settled
+    *     cold entry stays "settle"-only: there the median IS sound.
     *
-    * Pure function of one row's already-collected signals, so the
-    * thresholds are pinned by unit test (BenchSuspectSpec) rather than
-    * by a flaky in-spec GC-hammering run. Empty = clean. */
+    * Pure, so the thresholds are pinned by unit test (BenchSuspectSpec)
+    * rather than by a flaky GC-hammering run. Empty = clean. */
   private[graft] def suspectReasons(medianSecs: Double, repSecs: Seq[Double],
       gcMsTotal: Long, built: Seq[String]): Seq[String] = {
     if (medianSecs <= 0 || repSecs.isEmpty) return Nil
@@ -123,30 +89,27 @@ object Bench {
         if (disperse) Some("disperse") else None).flatten
   }
 
-  /** JSON string escape for env-controlled text (paths) interpolated
-    * into the output lines — a quote or backslash in a path would
-    * invalidate the whole line. Shared with [[Slope]]. */
-  private[graft] def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  /** One timed rep's signals. */
+  private case class Rep(secs: Double, shuffle: Long, spill: Long, gcMs: Long,
+      compiles: Long, built: Seq[String])
+
+  /** One query's row: median secs (-1 when any rep failed), median
+    * shuffle/spill bytes, GC ms and compilations summed over the reps,
+    * every rep's secs, the index families built, and the canary median in
+    * effect when it ran. */
+  private case class Row(name: String, secs: Double, shuffle: Long, spill: Long,
+      gcMs: Long, compiles: Long, reps: Seq[Double], built: Seq[String], canary: Double) {
+    def suspect: Seq[String] = suspectReasons(secs, reps, gcMs, built)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(Harness.onlyEnv)
+    val spark = Harness.session(4)
 
-    // Task-level scale counters. Listener delivery is async; deltas are
-    // read only after waitQuiesce saw the counters stable, so attribution
-    // error is bounded to stragglers of the PREVIOUS query (none, once
-    // stable).
+    // Listener delivery is async; deltas are read only after waitQuiesce
+    // saw the counters stable, so attribution error is bounded to
+    // stragglers of the previous query (none, once stable).
     val shuffleBytes = new AtomicLong
     val spillBytes = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -167,221 +130,132 @@ object Bench {
         tries += 1
       }
     }
+    def fence(): Unit = { System.gc(); Thread.sleep(100); waitQuiesce() }
 
-    // Materialization alone is the measured work; the CacheTracker
-    // release of builder-persisted intermediates happens AFTER the clock
-    // stops (round-4 finding: the blocking unpersist inside the timed
-    // region charged cache-release cost to the query and made
-    // cache-churning queries read high in-session).
-    def materialize(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // The release point also UNSCOPES any MV rewrite rules the query
-    // installed (shared helper — the pairing must stay in lockstep with
-    // Verify's release point).
-    def release(): Unit = CacheTracker.releaseQueryScope(spark)
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try materialize(fn)
-      finally release()
     // Warm up session machinery (codegen, parquet reader, shuffle paths)
     // so the first timed query isn't charged for JVM/session init — and
     // never skip it silently: a renamed warmup key would otherwise
     // charge init to whichever query times first.
-    SparkEntry.queries.get(CANARY_QUERY) match {
-      case Some(fn) => run(fn)
-      case None =>
-        System.err.println(s"BENCH WARN: warmup query $CANARY_QUERY missing; using first registered")
-        SparkEntry.queries.values.headOption.foreach(run)
-    }
+    SparkEntry.queries.get(CANARY_QUERY).map(CANARY_QUERY -> _).orElse {
+      System.err.println(s"BENCH WARN: warmup query $CANARY_QUERY missing; using first registered")
+      SparkEntry.queries.headOption
+    }.foreach { case (n, fn) => Harness.run(spark, n, fn, sfDir)(Harness.noop) }
 
-    // Host-speed canary (see [[canaryRef]]): median-of-3 solo timings of
-    // the warmup query, re-taken every CANARY_EVERY queries so a
-    // contention burst mid-suite stamps only the rows it overlapped.
     val canaryMedians = scala.collection.mutable.ArrayBuffer.empty[Double]
     def timeCanary(): Unit = SparkEntry.queries.get(CANARY_QUERY).foreach { fn =>
-      val reps = (1 to 3).flatMap { _ =>
-        System.gc(); Thread.sleep(100); waitQuiesce()
-        val t0 = System.nanoTime()
-        val s = try Some(materialize(fn)).map(_ => (System.nanoTime() - t0) / 1e9)
-                catch { case _: Throwable => None }
-                finally release()
-        s
-      }.sorted
-      if (reps.nonEmpty) canaryMedians += reps(reps.size / 2)
+      val reps = (1 to 3).map { _ =>
+        fence(); Harness.timedRep(spark, CANARY_QUERY, fn, sfDir)._1
+      }.filter(_ >= 0)
+      if (reps.nonEmpty) canaryMedians += Harness.median(reps)
     }
     timeCanary()
 
-    // Dev-loop filter: SPARK_GRAFT_ONLY="q_a,q_b" times just those
-    // queries (fresh-session solo medians for gap diagnosis). The driver
-    // never sets it, so its runs always time the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    // (name, median secs, median shuffle bytes, median spill bytes);
-    // secs = -1 marks a failed query (excluded from the total).
-    val results = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .toSeq.zipWithIndex
-      .map { case ((name, fn), qi) =>
-      // periodic canary re-time: a contention burst mid-suite stamps
-      // only the rows it overlapped (stamp = latest canary median)
+    // SPARK_GRAFT_DEBUG=1: per-rep GC-time deltas and block-store
+    // residue on stderr.
+    val debug = sys.env.get("SPARK_GRAFT_DEBUG").contains("1")
+    def gcMs: Long = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+        .asScala.map(_.getCollectionTime).sum
+    }
+    // Janino compilations since JVM start, i.e. codegen-cache misses: a
+    // query whose reps keep compiling in-suite but not solo is inflated
+    // by neighbours' cache evictions, not by its plan.
+    def compileN: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi > 0 && qi % CANARY_EVERY == 0) timeCanary()
-      // SPARK_GRAFT_DEBUG=1 (never set by the driver): per-rep GC-time
-      // deltas on stderr, for attributing in-suite-only slowdowns to
-      // collector pressure vs real execution cost.
-      val debug = sys.env.get("SPARK_GRAFT_DEBUG").contains("1")
-      def gcMs: Long = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime).sum
-      }
-      // Janino compilations since JVM start — the codegen-cache MISS
-      // counter: a query whose reps keep compiling in-suite (cache
-      // evictions from neighbors) but not solo is inflated by codegen,
-      // not by its plan. Always-on (MXBean/metric reads are ~free) so a
-      // driver-host BENCH run self-attributes without a builder re-time.
-      def compileN: Long =
-        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      def oneRep(rep: Int): (Double, Long, Long, Long, Long, Seq[String]) = {
-        // JMH-style clean point BEFORE EVERY REP (outside timing): pay
-        // accumulated GC debt here, not inside the measurement. The
-        // per-query-boundary fence alone left single 13–35 s outlier
-        // reps on the driver host (r12's only apparent "regressions")
-        // — a neighbor rep's cache churn was being collected inside
-        // the next rep's clock.
-        System.gc()
-        Thread.sleep(100)
-        waitQuiesce()
-        AtRest.drainBuildEvents() // clear residue from the previous rep
+      def oneRep(rep: Int): Rep = {
+        fence()
         val sh0 = shuffleBytes.get; val sp0 = spillBytes.get
         val gc0 = gcMs; val cn0 = compileN
-        val t0 = System.nanoTime()
-        val secs =
-          try { materialize(fn); (System.nanoTime() - t0) / 1e9 }
-          catch {
-            case t: Throwable =>
-              System.err.println(s"BENCH FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
-              -1.0
-          }
-          // clock stopped — now release builder-persisted intermediates
-          // and MV rule scope (blocking-unpersist cost stays outside
-          // the measurement)
-          finally release()
-        // at-rest indexes BUILT inside this timed rep (vs merely read):
-        // a rep that paid an index build is environment-inflated — the
-        // round-11 q_dedup_eval oscillation suspect this flag closes.
-        val built = AtRest.drainBuildEvents()
+        val (secs, built) = Harness.timedRep(spark, name, fn, sfDir)
         val gcD = gcMs - gc0; val cnD = compileN - cn0
         if (debug) System.err.println(
           f"BENCHDBG $name rep$rep ${secs}%.3fs gc=${gcD}ms compiles=$cnD built=${built.mkString("+")}")
         waitQuiesce()
-        (secs, shuffleBytes.get - sh0, spillBytes.get - sp0, gcD, cnD, built)
+        Rep(secs, shuffleBytes.get - sh0, spillBytes.get - sp0, gcD, cnD, built)
       }
-      var runs: Vector[(Double, Long, Long, Long, Long, Seq[String])] =
-        (1 to REPS).map(oneRep).toVector
-      // Adaptive rep widening: with median-of-3, ONE outlier rep shifts
-      // the median from the mid to the higher of the two good reps
-      // (q_assoc_rules r12: reps [3.6, 2.3, 13.7] → median 3.6, read as
-      // a regression). When the spread exceeds 3× — and no rep paid an
-      // at-rest index build or failed — two extra reps make it a
+      var runs = (1 to REPS).map(oneRep).toVector
+      // Adaptive widening: with median-of-3 ONE outlier rep moves the
+      // median to the higher good rep. When the spread exceeds 3× — and
+      // no rep built an index or failed — two extra reps make it a
       // median-of-5, which one outlier cannot move. The 0.05 s floor
-      // keeps sub-noise-scale fast rows from re-running pointlessly.
+      // keeps sub-noise-scale rows from re-running pointlessly.
       locally {
-        val secs = runs.map(_._1)
-        if (!secs.exists(_ < 0) && runs.forall(_._6.isEmpty) &&
+        val secs = runs.map(_.secs)
+        if (!secs.exists(_ < 0) && runs.forall(_.built.isEmpty) &&
             secs.max > 3 * math.max(secs.min, 0.05))
           runs ++= ((REPS + 1) to (REPS + 2)).map(oneRep)
       }
-      // r18 (verdict item 3): block-store residue at the query boundary
-      // — a growing rdd count / byte total across the suite is the
-      // leak-pressure signature behind in-suite-vs-solo inflation.
-      // Debug-only and outside all timing; the driver never sets DEBUG.
+      // Block-store residue at the query boundary: a growing rdd count or
+      // byte total across the suite is the leak-pressure signature.
       if (debug) {
         val info = spark.sparkContext.getRDDStorageInfo
         System.err.println(s"BENCHDBG $name blockstore: rdds=${info.length}" +
           s" mem_mb=${info.map(_.memSize).sum / 1024 / 1024}" +
           s" disk_mb=${info.map(_.diskSize).sum / 1024 / 1024}")
       }
-      def medianD(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-      def medianL(xs: Seq[Long]): Long = xs.sorted.apply(xs.size / 2)
-      val repSecs = runs.map(_._1)
-      val builds = runs.flatMap(_._6).distinct
+      val repSecs = runs.map(_.secs)
+      val builds = runs.flatMap(_.built).distinct
       val canary = canaryMedians.lastOption.getOrElse(-1.0)
-      if (runs.exists(_._1 < 0)) (name, -1.0, 0L, 0L, 0L, 0L, repSecs, builds, canary)
-      else (name, medianD(runs.map(_._1)), medianL(runs.map(_._2)), medianL(runs.map(_._3)),
-        runs.map(_._4).sum, runs.map(_._5).sum, repSecs, builds, canary)
+      if (repSecs.exists(_ < 0)) Row(name, -1.0, 0L, 0L, 0L, 0L, repSecs, builds, canary)
+      else Row(name, Harness.median(repSecs), Harness.median(runs.map(_.shuffle)),
+        Harness.median(runs.map(_.spill)), runs.map(_.gcMs).sum, runs.map(_.compiles).sum,
+        repSecs, builds, canary)
     }
     timeCanary() // close the window: drift during the suite's tail shows
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
-    def fmt(v: Double): String =
-      if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val total = results.map(_.secs).filter(_ >= 0).sum
+    import Harness.fmt
     // FAILURES first (a crashed query is the line's most important
-    // signal — sorted to the tail it would be silently capped out and
-    // the shrunken total would read as a perf win), then slowest first;
-    // stop at the first entry that would exceed the cap so the map is a
-    // true prefix of that order.
-    val sorted = results.sortBy(r => -(if (r._2 < 0) Double.MaxValue else r._2))
-    val failed = results.count(_._2 < 0)
+    // signal — sorted to the tail it would be capped out and the shrunken
+    // total would read as a perf win), then slowest first; stop at the
+    // first entry that would exceed the cap so the map is a true prefix
+    // of that order.
+    val sorted = results.sortBy(r => -(if (r.secs < 0) Double.MaxValue else r.secs))
+    val failed = results.count(_.secs < 0)
     val sb = new StringBuilder
     var kept = 0
     var full = false
-    sorted.foreach { case (k, v, _, _, _, _, _, _, _) =>
-      val piece = (if (kept > 0) "," else "") + "\"" + k + "\":" + fmt(v)
-      // cap 1050 (was 1150): the r14 line measured 1968 of the driver's
-      // 2000-char tail capture; host_factor + canary_sec cost ~80 chars,
-      // paid for here so the line head can never be truncated away
+    sorted.foreach { r =>
+      val piece = (if (kept > 0) "," else "") + "\"" + r.name + "\":" + fmt(r.secs)
+      // The cap keeps the whole line (with the fixed-width keys around
+      // the map) inside a 2000-char output tail, so the line head can
+      // never be truncated away.
       if (!full && sb.length + piece.length <= 1050) { sb.append(piece); kept += 1 }
       else full = true
     }
     val omitted = results.size - kept
-    // scale signature of the slowest queries: [shuffle_kb, spill_kb]
-    // (KB keeps the line comfortably under the driver's tail capture)
-    val shuf = sorted.take(10)
-      .map { case (k, _, sh, sp, _, _, _, _, _) => "\"" + k + "\":[" + sh / 1024 + "," + sp / 1024 + "]" }
-      .mkString(",")
-    // environment attribution for the slowest queries: [gc_ms, janino
-    // compilations] summed over the reps — a row that is slow WITH high
-    // gc/compile counts is environment-inflated (collector pressure /
-    // codegen-cache eviction), one without them is intrinsically slow.
-    val diag = sorted.take(10)
-      .map { case (k, _, _, _, gc, cn, _, _, _) => "\"" + k + "\":[" + gc + "," + cn + "]" }
-      .mkString(",")
-    // host-speed canary → host_factor: the run's canary medians against
-    // the committed quiet-host reference for this tier. >~1.3 = the
-    // window was hot and every row is suspect by that much; -1 = no
-    // reference for this tier (derived corpora) — never a guess.
+    // the slowest queries' [shuffle_kb, spill_kb] and [gc_ms, compiles]
+    val top = sorted.take(10)
+    val shuf = top.map(r => "\"" + r.name + "\":[" + r.shuffle / 1024 + "," + r.spill / 1024 + "]").mkString(",")
+    val diag = top.map(r => "\"" + r.name + "\":[" + r.gcMs + "," + r.compiles + "]").mkString(",")
     val canarySeq = canaryMedians.toSeq
-    val canaryMed =
-      if (canarySeq.isEmpty) -1.0 else canarySeq.sorted.apply(canarySeq.size / 2)
+    val canaryMed = if (canarySeq.isEmpty) -1.0 else Harness.median(canarySeq)
     val hostFactor = canaryRef.get(new java.io.File(sfDir).getName) match {
       case Some(ref) if canaryMed > 0 => canaryMed / ref
       case _ => -1.0
     }
-    // The per-rep seconds and at-rest build flags live in
-    // bench_attr.json ONLY — the stdout line sits near the driver's
-    // ~2 KB tail-capture cap, and truncating its head would invalidate
-    // the whole round's bench. Here just the COUNT of rows that built
-    // an index inside a timed rep (0 on a warm at-rest tree).
-    val builtCount = sorted.count(_._8.nonEmpty)
-    val nSuspect = sorted.count { case (_, v, _, _, gc, _, rs, b, _) =>
-      suspectReasons(v, rs, gc, b).nonEmpty }
-    val sfJ = esc(sfDir)
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$REPS,"queries":{${sb.result()}},"shuffle_kb":{$shuf},"gc_compile":{$diag},"host_factor":${fmt(hostFactor)},"canary_sec":[${canarySeq.map(fmt).mkString(",")}],"built_in_rep":$builtCount,"suspect":$nSuspect,"failed":$failed,"n_queries":${results.size},"omitted":$omitted,"attr_file":"bench_attr.json","sf":"$sfJ"}"""
-    // full attribution for EVERY row (slowest first), one object per
-    // query: [secs, shuffle_kb, spill_kb, gc_ms, compiles, [rep secs...],
-    // "built index families", canary_sec in effect when the row ran,
-    // "suspect reasons" (see [[suspectReasons]]; "" = clean)]
-    val attr = sorted.map { case (k, v, sh, sp, gc, cn, rs, b, cy) =>
-      "\"" + k + "\":[" + fmt(v) + "," + sh / 1024 + "," + sp / 1024 + "," + gc + "," + cn +
-        ",[" + rs.map(fmt).mkString(",") + "],\"" + b.mkString("+") + "\"," + fmt(cy) +
-        ",\"" + suspectReasons(v, rs, gc, b).mkString("+") + "\"]"
+    // Per-rep seconds and build flags live in bench_attr.json only; the
+    // stdout line carries just the count of rows that built an index
+    // inside a timed rep (0 on a warm at-rest tree).
+    val builtCount = sorted.count(_.built.nonEmpty)
+    val nSuspect = sorted.count(_.suspect.nonEmpty)
+    val sfJ = Harness.esc(sfDir)
+    val canaryJ = canarySeq.map(fmt).mkString(",")
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$REPS,"queries":{${sb.result()}},"shuffle_kb":{$shuf},"gc_compile":{$diag},"host_factor":${fmt(hostFactor)},"canary_sec":[$canaryJ],"built_in_rep":$builtCount,"suspect":$nSuspect,"failed":$failed,"n_queries":${results.size},"omitted":$omitted,"attr_file":"bench_attr.json","sf":"$sfJ"}"""
+    // one array per query, slowest first, in the order of "columns"
+    // ("suspect" = suspectReasons joined by "+", "" = clean)
+    val attr = sorted.map { r =>
+      "\"" + r.name + "\":[" + fmt(r.secs) + "," + r.shuffle / 1024 + "," + r.spill / 1024 + "," +
+        r.gcMs + "," + r.compiles + ",[" + r.reps.map(fmt).mkString(",") + "],\"" +
+        r.built.mkString("+") + "\"," + fmt(r.canary) + ",\"" + r.suspect.mkString("+") + "\"]"
     }.mkString(",")
     // "reps" is the BASE rep count; rows the adaptive widening re-ran
-    // carry 5 entries in their reps_sec array and are counted in
-    // "widened" — so the file can't claim median-of-3 for a row whose
-    // reported median was actually taken over 5
-    val widened = results.count(_._7.size > REPS)
-    val attrLine = s"""{"total_sec":${fmt(total)},"reps":$REPS,"widened":$widened,"suspect":$nSuspect,"n_queries":${results.size},"sf":"$sfJ","host_factor":${fmt(hostFactor)},"canary_sec":[${canarySeq.map(fmt).mkString(",")}],"columns":["secs","shuffle_kb","spill_kb","gc_ms","compiles","reps_sec","atrest_built","canary_sec","suspect"],"queries":{$attr}}"""
+    // carry 5 entries in reps_sec and are counted in "widened"
+    val widened = results.count(_.reps.size > REPS)
+    val attrLine = s"""{"total_sec":${fmt(total)},"reps":$REPS,"widened":$widened,"suspect":$nSuspect,"n_queries":${results.size},"sf":"$sfJ","host_factor":${fmt(hostFactor)},"canary_sec":[$canaryJ],"columns":["secs","shuffle_kb","spill_kb","gc_ms","compiles","reps_sec","atrest_built","canary_sec","suspect"],"queries":{$attr}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_attr.json"),
       (attrLine + "\n").getBytes("UTF-8"))
     catch { case t: Throwable => System.err.println(s"bench_attr.json write failed: $t") }

@@ -1,52 +1,35 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev-loop plan capture for the optimization rounds: writes
-  * `.explain("formatted")` output for each named query to
-  * `$SPARK_GRAFT_PLAN_DIR/<name>_<suffix>.txt` (the judge checks plan
-  * claims in OPTIMIZATION_r*.md against these files).
+/** Plan capture: `PlanDump [query...]` writes each named query's (every
+  * registered query's when none are named)
+  * `.explain("formatted")` output, headed by its [[PlanAudit]] metrics, to
+  * `$SPARK_GRAFT_PLAN_DIR/<name>_<suffix>.txt` (suffix from
+  * SPARK_GRAFT_PLAN_SUFFIX), so plan claims can be checked against files.
   *
-  * Each query is materialized through the noop sink FIRST so that (a)
-  * at-rest queries dump their warm read-path plan, not the one-off
-  * builder plan, and (b) a fresh planning pass afterwards reflects the
-  * state the bench times. Uses the same session config as Bench/Verify.
+  * Each query is first materialized through the noop sink, so at-rest
+  * queries dump their warm read-path plan rather than the one-off build
+  * plan, and the fresh planning pass afterwards reflects the state the
+  * bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r17")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(args.toSeq)
+    val spark = Harness.session(32)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    args.foreach { n =>
-      SparkEntry.queries.get(n) match {
-        case Some(fn) =>
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          } catch {
-            case t: Throwable => System.err.println(s"PLANDUMP warm FAIL $n: $t")
-          } finally CacheTracker.releaseQueryScope(spark)
-          try {
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-            val audit = PlanAudit.metrics(df)
-              .map { case (k, v) => s"$k=$v" }.mkString("-- PlanAudit: ", " ", "\n")
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
-              (audit + txt).getBytes("UTF-8"))
-            println(s"PLANDUMP WROTE $outDir/${n}_$suffix.txt")
-          } catch {
-            case t: Throwable => System.err.println(s"PLANDUMP FAIL $n: $t")
-          } finally CacheTracker.releaseQueryScope(spark)
-        case None => System.err.println(s"PLANDUMP UNKNOWN $n")
+    selected.foreach { case (n, fn) =>
+      Harness.run(spark, n, fn, sfDir)(Harness.noop)
+      Harness.run(spark, n, fn, sfDir) { df =>
+        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val audit = PlanAudit.metrics(df)
+          .map { case (k, v) => s"$k=$v" }.mkString("-- PlanAudit: ", " ", "\n")
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
+          (audit + txt).getBytes("UTF-8"))
+        println(s"PLANDUMP WROTE $outDir/${n}_$suffix.txt")
       }
     }
     spark.stop()

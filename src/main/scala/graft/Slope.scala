@@ -1,108 +1,71 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scaling-slope audit: times EVERY registered query at two scale
-  * factors (default sf0.01 and sf0.1 — a 10× data ratio) in one JVM and
-  * writes a per-query slope table to `slope.json`. This is the 100×
-  * early warning the per-query plan guards cannot give: a plan can be
+/** Scaling-slope audit: times every registered query (or the
+  * `SPARK_GRAFT_ONLY` selection) at two scale factors in one JVM and
+  * writes a per-query slope table to `slope.json`. A plan can be
   * shuffle-clean and still hide a super-linear stage (a candidate set
-  * that grows quadratically with corpus size, an iterative algorithm
-  * whose rounds grow with data). A time ratio ≈ the data ratio is
-  * linear scaling; well below it means fixed overheads dominate at this
-  * size; SUPER-linear rows (ratio > `flag_over`, default 12 = data
-  * ratio + noise margin) are flagged for adjudication — either an
-  * intrinsic pair-quadratic eval (document it) or a real scale bug.
+  * that grows quadratically, an iterative algorithm whose rounds grow
+  * with data); the time ratio shows it. A ratio near the data ratio is
+  * linear scaling, well below it means fixed overheads dominate, and rows
+  * above [[FLAG_OVER]] (the 10× default data ratio plus a noise margin)
+  * are flagged for adjudication: an intrinsic pair-quadratic eval to
+  * document, or a real scale bug.
   *
-  * Method per (query, sf): MIN of 2 reps through the same noop-sink
-  * materialization as [[Bench]] — min (not median) because the slope
-  * wants the intrinsic cost floor, not the environment; the first rep
-  * absorbs index builds / codegen and the second is usually the floor.
-  * At-rest builds are drained per rep (same flag as Bench) so a row
-  * whose BOTH reps built — q_takedown_purge rebuilds by design — is
-  * visibly build-priced rather than misread as super-linear. Queries
-  * run small-SF first; the r12 per-source gcStale scoping is what makes
-  * the two corpora's at-rest generations coexist in one run.
+  * Per (query, sf) the statistic is the MIN of [[REPS]] timed reps
+  * ([[Harness.timedRep]]): the slope wants the intrinsic cost floor, not
+  * the environment, and the first rep absorbs index builds and codegen.
+  * Builds are reported per row so a row whose reps both built is visibly
+  * build-priced rather than misread as super-linear. Queries run small-SF
+  * first; per-source at-rest GC scoping lets both corpora's generations
+  * coexist in one run.
   *
-  * Run: `sbt "runMain graft.Slope"` (≈12 min at local[32]); env
-  * overrides SPARK_GRAFT_SF_SMALL / SPARK_GRAFT_SF_BIG /
-  * SPARK_GRAFT_CPUS / SPARK_GRAFT_ONLY (same dev-loop filter as Bench) /
-  * SPARK_GRAFT_SLOPE_OUT (output path, default `slope.json` — the
-  * derived-corpus audits write their own file, e.g. `slope_emb.json`
-  * for the 10×-embeddings step built by [[EmbCorpus]]).
+  * Env: SPARK_GRAFT_SF_SMALL / SPARK_GRAFT_SF_BIG (default sf0.01 /
+  * sf0.1), SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY, SPARK_GRAFT_SLOPE_OUT
+  * (output path; derived-corpus audits such as the 10×-embeddings step
+  * of [[EmbCorpus]] write their own file).
   */
 object Slope {
   private val REPS = 2
+  private val FLAG_OVER = 12.0
 
   def main(args: Array[String]): Unit = {
     val sfSmall = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
     val sfBig = sys.env.getOrElse("SPARK_GRAFT_SF_BIG", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val flagOver = sys.env.getOrElse("SPARK_GRAFT_SLOPE_FLAG", "12.0").toDouble
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(Harness.onlyEnv)
+    val spark = Harness.session(32)
 
-    def materialize(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // (min secs over reps, families built in ANY rep) — -1 on failure
-    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): (Double, Seq[String]) = {
-      val reps = (1 to REPS).map { _ =>
-        AtRest.drainBuildEvents()
-        val t0 = System.nanoTime()
-        val secs =
-          try { materialize(fn, dir); (System.nanoTime() - t0) / 1e9 }
-          catch {
-            case t: Throwable =>
-              System.err.println(s"SLOPE FAIL $name @ $dir: ${t.getClass.getName}: ${t.getMessage}")
-              -1.0
-          }
-          finally CacheTracker.releaseQueryScope(spark)
-        (secs, AtRest.drainBuildEvents())
-      }
-      if (reps.exists(_._1 < 0)) (-1.0, reps.flatMap(_._2).distinct)
-      else (reps.map(_._1).min, reps.flatMap(_._2).distinct)
+    // (min secs over reps, -1 on failure; families built in ANY rep)
+    def time(name: String, fn: Harness.Builder, dir: String): (Double, Seq[String]) = {
+      val reps = (1 to REPS).map(_ => Harness.timedRep(spark, name, fn, dir))
+      val secs = reps.map(_._1)
+      (if (secs.exists(_ < 0)) -1.0 else secs.min, reps.flatMap(_._2).distinct)
     }
 
-    // session warmup (same contract as Bench: never charge JVM init to
-    // the first timed row)
+    // warmup: never charge JVM/session init to the first timed row
     SparkEntry.queries.get("q1_pricing_summary").foreach(fn => time("warmup", fn, sfSmall))
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val rows = SparkEntry.queries
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .map { case (name, fn) =>
-        val (tS, bS) = time(name, fn, sfSmall)
-        val (tB, bB) = time(name, fn, sfBig)
-        // floor the denominator at 30 ms: below that the "slope" is
-        // pure scheduler noise and would flag spuriously
-        val ratio = if (tS < 0 || tB < 0) -1.0 else tB / math.max(tS, 0.03)
-        System.err.println(f"SLOPE $name%-28s small=$tS%7.3f big=$tB%7.3f ratio=$ratio%6.2f" +
-          (if (bS.nonEmpty || bB.nonEmpty) s" built=${(bS ++ bB).distinct.mkString("+")}" else ""))
-        (name, tS, tB, ratio, (bS ++ bB).distinct)
-      }.toSeq
+    val rows = selected.map { case (name, fn) =>
+      val (tS, bS) = time(name, fn, sfSmall)
+      val (tB, bB) = time(name, fn, sfBig)
+      // floor the denominator at 30 ms: below that the "slope" is
+      // pure scheduler noise and would flag spuriously
+      val ratio = if (tS < 0 || tB < 0) -1.0 else tB / math.max(tS, 0.03)
+      System.err.println(f"SLOPE $name%-28s small=$tS%7.3f big=$tB%7.3f ratio=$ratio%6.2f" +
+        (if (bS.nonEmpty || bB.nonEmpty) s" built=${(bS ++ bB).distinct.mkString("+")}" else ""))
+      (name, tS, tB, ratio, (bS ++ bB).distinct)
+    }
 
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Harness.fmt
     val sorted = rows.sortBy(-_._4)
-    val flagged = sorted.filter(r => r._4 > flagOver)
+    val flagged = sorted.filter(_._4 > FLAG_OVER)
     val body = sorted.map { case (n, a, b, r, bu) =>
       "\"" + n + "\":[" + fmt(a) + "," + fmt(b) + "," + fmt(r) + ",\"" + bu.mkString("+") + "\"]"
     }.mkString(",")
-    // env-controlled paths go through the shared escaper (Bench.esc) —
-    // a quote/backslash in an override would invalidate the whole file
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SLOPE_OUT", "slope.json")
-    val line = s"""{"sf_small":"${Bench.esc(sfSmall)}","sf_big":"${Bench.esc(sfBig)}","reps":$REPS,"stat":"min","flag_over":$flagOver,"n_queries":${rows.size},"flagged":[${flagged.map("\"" + _._1 + "\"").mkString(",")}],"columns":["small_sec","big_sec","ratio","atrest_built"],"queries":{$body}}"""
+    val line = s"""{"sf_small":"${Harness.esc(sfSmall)}","sf_big":"${Harness.esc(sfBig)}","reps":$REPS,"stat":"min","flag_over":$FLAG_OVER,"n_queries":${rows.size},"flagged":[${flagged.map("\"" + _._1 + "\"").mkString(",")}],"columns":["small_sec","big_sec","ratio","atrest_built"],"queries":{$body}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes("UTF-8"))
-    println(s"SLOPE DONE: ${rows.size} queries, ${flagged.size} flagged > ${flagOver}x -> $outPath")
+    println(s"SLOPE DONE: ${rows.size} queries, ${flagged.size} flagged > ${FLAG_OVER}x -> $outPath")
     spark.stop()
   }
 }

@@ -1,57 +1,36 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+/** Correctness dump for the DuckDB oracle compare (`tools/check.py`):
+  * `Verify <sfDir> <outDir> [query...]` writes each selected query's
+  * result (all of them when none are named) to `<outDir>/<name>` as one
+  * parquet file, plus `<outDir>/oracle_sql.json` with every query's
+  * oracle SQL. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional extra args: run only these queries (dev loop); the
-    // driver's 2-arg invocation always runs everything
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")) // UTC timezone via Tables.sessionConfs
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(args.drop(2).toSeq)
+    val spark = Harness.session(4)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // a failure must not alias a PRIOR run's dump in a reused
-        // outDir: a stale parquet here would make the oracle compare a
-        // pre-edit result and report a false pass
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(del))
-          f.delete(); ()
-        }
-        del(new java.io.File(s"$outDir/$name"))
-      }
-      // builder-persisted intermediates + MV rule scope (shared helper —
-      // the pairing must stay in lockstep with Bench's release point)
-      finally CacheTracker.releaseQueryScope(spark)
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    selected.foreach { case (name, fn) => dump(spark, name, fn, sfDir, outDir) }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => "\"" + Harness.esc(k) + "\": \"" + Harness.esc(v) + "\"" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes query `name`'s result to `<outDir>/<name>`; returns false on
+    * failure. A failed query leaves no directory behind: in a reused
+    * outDir a prior run's dump would otherwise be compared in its place
+    * and report a false pass. */
+  private[graft] def dump(spark: SparkSession, name: String, fn: Harness.Builder,
+      sfDir: String, outDir: String): Boolean = {
+    val dir = new java.io.File(outDir, name)
+    val ok = Harness.run(spark, name, fn, sfDir)(
+      _.coalesce(1).write.mode("overwrite").parquet(dir.getPath)).isDefined
+    if (!ok) AtRest.deleteRecursively(dir)
+    ok
   }
 }

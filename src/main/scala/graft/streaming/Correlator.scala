@@ -2,78 +2,15 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** The gateway's request/response correlator (G12/G13, gateway.ts:72-137,
-  * 311-325) as a stateful streaming operator.
-  *
-  * Semantics mirrored from the reference:
-  *  - a request registers keyed state under its serial number `sn`
-  *    (gateway.ts:318-323);
-  *  - a response that finds the state emits a `matched` record with the
-  *    measured latency and clears the state (gateway.ts:74-81, 69);
-  *  - a response with no state is an `unmatched_response` dead-letter
-  *    (gateway.ts:134-136);
-  *  - a request unanswered for `timeoutMs` (default 30 s, the nanomsg
-  *    receive timeout, gateway.ts:56) emits a `timeout` record via an
-  *    event-time timer.
-  *
-  * Built on `flatMapGroupsWithState` with EventTimeTimeout — state is
-  * partitioned by `sn` so the operator scales horizontally with the key
-  * space; per-key state is O(1) and freed on match or timeout, so total
-  * state is bounded by the in-flight window, not the stream length.
-  */
+/** Event types of the gateway's request/response correlator (G12/G13,
+  * gateway.ts:72-137, 311-325), implemented by [[CorrelatorV2.correlate]]. */
 object Correlator {
 
   /** A request or response on the gateway bus, unioned into one stream.
     * kind ∈ {"request", "response"}. */
   case class GwEvent(sn: String, kind: String, ts: Timestamp)
 
-  case class InFlight(startMs: Long)
-
   /** outcome ∈ {"matched", "timeout", "unmatched_response"}; latency_ms
     * is -1 for non-matched outcomes. */
   case class Correlated(sn: String, outcome: String, latency_ms: Long)
-
-  def correlate(events: Dataset[GwEvent], timeoutMs: Long = 30000L,
-      watermarkDelay: String = "10 seconds"): Dataset[Correlated] = {
-    val spark: SparkSession = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.sn)
-      .flatMapGroupsWithState[InFlight, Correlated](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (sn: String, it: Iterator[GwEvent], state: GroupState[InFlight]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.single(Correlated(sn, "timeout", -1L))
-          } else {
-            // Event-TIME order within a batch (arrival order in a
-            // micro-batch is not meaningful; the reference's single event
-            // loop processed in wall order, and event time is its proxy),
-            // requests first only at EQUAL timestamps (a same-instant
-            // request/response pair must pair up). Kind-major ordering
-            // would be wrong under sn reuse: a response landing in the
-            // same batch as a LATER reused-sn request would match the new
-            // request (negative latency), steal its state, and silently
-            // lose both the real match and the new request's timeout.
-            val evs = it.toSeq.sortBy(e => (e.ts.getTime, if (e.kind == "request") 0 else 1))
-            val out = Seq.newBuilder[Correlated]
-            evs.foreach { e =>
-              if (e.kind == "request") {
-                state.update(InFlight(e.ts.getTime))
-                state.setTimeoutTimestamp(e.ts.getTime + timeoutMs)
-              } else if (state.exists) {
-                out += Correlated(sn, "matched", e.ts.getTime - state.get.startMs)
-                state.remove()
-              } else {
-                out += Correlated(sn, "unmatched_response", -1L)
-              }
-            }
-            out.result().iterator
-          }
-      }
-  }
 }

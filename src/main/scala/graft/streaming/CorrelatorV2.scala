@@ -6,13 +6,24 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 
 import Correlator.{Correlated, GwEvent}
 
-/** The sn correlator on Spark 4's `transformWithState` StatefulProcessor
-  * API (SURVEY.md §7.3 — the Spark-4-native form of G12/G13). Same
-  * semantics as [[Correlator.correlate]]: matched / timeout (30 s
-  * rcvtimeo, gateway.ts:56) / unmatched-response, but with explicit
-  * `ValueState` + event-time timers, which at scale run on the RocksDB
-  * state store (set `spark.sql.streaming.stateStore.providerClass` to
-  * RocksDBStateStoreProvider; required by this operator).
+/** The gateway's request/response correlator (G12/G13, gateway.ts:72-137,
+  * 311-325) on Spark 4's `transformWithState` StatefulProcessor API
+  * (SURVEY.md §7.3). Semantics mirrored from the reference:
+  *  - a request registers keyed state under its serial number `sn`
+  *    (gateway.ts:318-323);
+  *  - a response that finds the state emits a `matched` record with the
+  *    measured latency and clears the state (gateway.ts:74-81, 69);
+  *  - a response with no state is an `unmatched_response` dead-letter
+  *    (gateway.ts:134-136);
+  *  - a request unanswered for `timeoutMs` (default 30 s, the nanomsg
+  *    receive timeout, gateway.ts:56) emits a `timeout` record via an
+  *    event-time timer.
+  *
+  * State is partitioned by `sn` and is O(1) per key, freed on match or
+  * timeout, so total state is bounded by the in-flight window, not the
+  * stream length. The `ValueState` and timers need the RocksDB state
+  * store (set `spark.sql.streaming.stateStore.providerClass` to
+  * RocksDBStateStoreProvider).
   */
 object CorrelatorV2 {
 
@@ -26,9 +37,13 @@ object CorrelatorV2 {
 
     override def handleInputRows(sn: String, rows: Iterator[GwEvent],
         timers: TimerValues): Iterator[Correlated] = {
-      // event-TIME order, requests first only at equal timestamps — see
-      // Correlator.correlate: kind-major ordering mis-pairs a response
-      // with a LATER reused-sn request arriving in the same micro-batch
+      // Event-TIME order within a batch (arrival order in a micro-batch
+      // is not meaningful; event time is the proxy for the reference's
+      // single event loop), requests first only at EQUAL timestamps (a
+      // same-instant request/response pair must pair up). Kind-major
+      // ordering would be wrong under sn reuse: a response landing in the
+      // same batch as a LATER reused-sn request would match the new
+      // request (negative latency) and lose the real match.
       val evs = rows.toSeq.sortBy(e => (e.ts.getTime, if (e.kind == "request") 0 else 1))
       val out = Seq.newBuilder[Correlated]
       evs.foreach { e =>

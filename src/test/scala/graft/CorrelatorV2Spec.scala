@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** transformWithState correlator — same decision table as CorrelatorSpec
-  * but on the Spark 4 StatefulProcessor API with the RocksDB state store
-  * (required by transformWithState). Separate session: the provider conf
-  * must be set before the streaming query starts. */
+/** The sn correlator ([[CorrelatorV2]], transformWithState on the RocksDB
+  * state store) driven through MemoryStream: matched / unmatched /
+  * timeout paths, the watermark boundary, checkpointed restart, sn reuse
+  * and within-batch ordering; plus the temporal joins on the same
+  * session setup. */
 class CorrelatorV2Spec extends AnyFunSuite {
 
   // Reuse the JVM-wide session; the state-store provider is a session
@@ -52,6 +53,30 @@ class CorrelatorV2Spec extends AnyFunSuite {
       assert(rows("orphan") == ("unmatched_response", -1L))
       assert(rows.get("lost").map(_._1).contains("timeout"))
       assert(!rows.contains("flush"))
+    } finally q.stop()
+  }
+
+  test("correlator emits timeout dead-letters once the event-time timer expires") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[GwEvent]
+    val q = CorrelatorV2.correlate(in.toDS(), timeoutMs = 30000L, watermarkDelay = "5 seconds")
+      .writeStream.format("memory").queryName("corrv2timeout").outputMode("append").start()
+    try {
+      in.addData(GwEvent("lost", "request", ts(0)))
+      q.processAllAvailable()
+      // advance watermark past ts(0) + 30 s timeout + 5 s delay
+      in.addData(GwEvent("later", "request", ts(60)))
+      q.processAllAvailable()
+      in.addData(GwEvent("later2", "request", ts(120)))
+      q.processAllAvailable()
+      val rows = spark.table("corrv2timeout").as[Correlator.Correlated].collect()
+        .map(c => c.sn -> c.outcome).toMap
+      assert(rows.get("lost").contains("timeout"))
+      // "later" (req at 60s, timer 90s) also expires once "later2" pushes
+      // the watermark to 115s; "later2" (timer 150s) is still in flight
+      assert(rows.get("later").contains("timeout"))
+      assert(!rows.contains("later2"))
     } finally q.stop()
   }
 

@@ -2,63 +2,17 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.streaming.{Correlator, StreamOps}
-import graft.streaming.Correlator.GwEvent
+import graft.streaming.StreamOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streaming semantics driven through MemoryStream: the sn correlator
-  * (matched / timeout / unmatched-response paths, mirroring
-  * gateway.ts:72-137 and the 30 s rcvtimeo at gateway.ts:56), windowed
-  * rate limiting, and watermarked dedup. */
+/** Streaming semantics driven through MemoryStream and file/socket
+  * sources: windowed rate limiting, watermarked dedup, the stream-stream
+  * request/response join, routed sinks and the streaming at-rest index
+  * maintenance. The sn correlator's cases live in CorrelatorV2Spec. */
 class StreamingSpec extends SparkSpec {
 
   private def ts(sec: Int): Timestamp = new Timestamp(1700000000000L + sec * 1000L)
-
-  test("correlator matches responses to requests and measures latency") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[GwEvent]
-    val q = Correlator.correlate(in.toDS(), timeoutMs = 30000L)
-      .writeStream.format("memory").queryName("corr1").outputMode("append").start()
-    try {
-      in.addData(
-        GwEvent("a", "request", ts(0)), GwEvent("b", "request", ts(1)),
-        GwEvent("a", "response", ts(2)), GwEvent("orphan", "response", ts(3)))
-      q.processAllAvailable()
-      in.addData(GwEvent("b", "response", ts(5)))
-      q.processAllAvailable()
-      val rows = spark.table("corr1").as[Correlator.Correlated].collect()
-        .map(c => c.sn -> (c.outcome, c.latency_ms)).toMap
-      assert(rows("a") == ("matched", 2000L))
-      assert(rows("b") == ("matched", 4000L))
-      assert(rows("orphan") == ("unmatched_response", -1L))
-    } finally q.stop()
-  }
-
-  test("correlator emits timeout dead-letters once the event-time timer expires") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[GwEvent]
-    val q = Correlator.correlate(in.toDS(), timeoutMs = 30000L, watermarkDelay = "5 seconds")
-      .writeStream.format("memory").queryName("corr2").outputMode("append").start()
-    try {
-      in.addData(GwEvent("lost", "request", ts(0)))
-      q.processAllAvailable()
-      // advance watermark past ts(0) + 30 s timeout + 5 s delay
-      in.addData(GwEvent("later", "request", ts(60)))
-      q.processAllAvailable()
-      in.addData(GwEvent("later2", "request", ts(120)))
-      q.processAllAvailable()
-      val rows = spark.table("corr2").as[Correlator.Correlated].collect()
-        .map(c => c.sn -> c.outcome).toMap
-      assert(rows.get("lost").contains("timeout"))
-      // "later" (req at 60s, timer 90s) also expires once "later2" pushes
-      // the watermark to 115s; "later2" (timer 150s) is still in flight
-      assert(rows.get("later").contains("timeout"))
-      assert(!rows.contains("later2"))
-    } finally q.stop()
-  }
 
   test("streaming windowed rate limit flags a burst over the cap") {
     implicit val sqlCtx = spark.sqlContext
@@ -210,32 +164,6 @@ class StreamingSpec extends SparkSpec {
       val st = mobile.collect().map(r => r.getAs[Long]("event_id") -> r.getAs[Int]("status")).toMap
       assert(st(1L) == 200 && st(3L) == 307)
     } finally q.stop()
-  }
-
-  test("correlator state survives a checkpointed query restart") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString
-    val in = MemoryStream[GwEvent]
-    // file sink (memory sink cannot recover from a checkpoint)
-    def start() = Correlator.correlate(in.toDS(), timeoutMs = 30000L)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt).outputMode("append").start()
-    val q1 = start()
-    in.addData(GwEvent("persist-me", "request", ts(0)))
-    q1.processAllAvailable()
-    q1.stop()
-    // restart from the checkpoint: the in-flight request must still be
-    // registered so the response correlates with the original latency
-    val q2 = start()
-    try {
-      in.addData(GwEvent("persist-me", "response", ts(7)))
-      q2.processAllAvailable()
-      val rows = spark.read.parquet(out).as[Correlator.Correlated].collect()
-        .map(c => c.sn -> (c.outcome, c.latency_ms)).toMap
-      assert(rows("persist-me") == ("matched", 7000L))
-    } finally q2.stop()
   }
 
   test("composed streaming gateway flow: auth dispatch + status-routed foreachBatch sinks") {

@@ -6,13 +6,16 @@
 #
 #   tools/preflight.sh            # compile + tests + sf0.001 Verify + oracle check
 #                                 # + the benchmark helpers' unit tests
-#   tools/preflight.sh --fast     # skip the ScalaTest suite (~3 min saved)
+#   tools/preflight.sh --fast     # run only the harness specs instead of the
+#                                 # full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 sbt -batch "compile; Test/compile" | tail -2
 if [[ "${1:-}" != "--fast" ]]; then
   sbt -batch test | tail -3
+else
+  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec" | tail -3
 fi
 OUT=/tmp/preflight_verify
 rm -rf "$OUT"
