@@ -21,7 +21,8 @@ object Harness {
 
   /** Local session with `SPARK_GRAFT_CPUS` task threads (default
     * `defaultCpus`) and as many shuffle partitions, UI off, WARN logging.
-    * UTC and the corpus read confs come from [[Tables.configure]]. */
+    * UTC, the corpus read confs and [[GraftExtensions]] come from
+    * [[Tables.configure]]. */
   def session(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val spark = Tables.configure(SparkSession.builder()

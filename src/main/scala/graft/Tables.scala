@@ -40,8 +40,12 @@ object Tables {
     // cache and degrades the late-suite heavy tail (round-7 finding).
     "spark.sql.codegen.cache.maxEntries" -> "5000")
 
+  /** The one session surface: [[sessionConfs]] plus [[GraftExtensions]]
+    * (functions, planner strategy, optimizer rule). Every entry point
+    * builds its session through this. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
-    sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    sessionConfs.foldLeft(b.withExtensions(new GraftExtensions)) {
+      case (bb, (k, v)) => bb.config(k, v) }
 
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

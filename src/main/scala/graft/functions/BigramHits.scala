@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -68,15 +67,4 @@ case class BigramHits(child: Expression, profile: Seq[String]) extends UnaryExpr
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object BigramHits {
-  /** Builder from the foldable CSV-profile second argument. */
-  def fromExprs(exprs: Seq[Expression]): BigramHits =
-    BigramHits(exprs.head,
-      exprs(1).eval().asInstanceOf[UTF8String].toString.split(",").toSeq)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_hits", fromExprs, "built-in")
 }

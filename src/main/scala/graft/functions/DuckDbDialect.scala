@@ -89,9 +89,8 @@ case class DuckListSum(child: Expression) extends RuntimeReplaceable
 
 object DuckDbDialect {
 
-  /** (name, builder) pairs, shared by [[register]] (ad-hoc sessions)
-    * and [[graft.GraftExtensions]] (the deployment path). */
-  val aliases: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** (name, builder) pairs installed by [[register]]. */
+  private val aliases: Seq[(String, Seq[Expression] => Expression)] = Seq(
     // string_split(s, sep): LITERAL delimiter split, keeping empty
     // fields ('a  b' -> [a, '', b]) — StringSplitSQL is the literal
     // (non-regex) splitter, so seps like '.' or '|' stay safe where
@@ -290,14 +289,16 @@ object DuckDbDialect {
     * TABLE function registry (scalar-position unnest is the Explode
     * alias above). Un-correlated uses plan as a plain cross join;
     * correlated uses need LATERAL, as for any Spark TVF. */
-  val unnestTable: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val unnestTable: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     exprs => org.apache.spark.sql.catalyst.plans.logical.Generate(
       Explode(exprs.head), unrequiredChildIndex = Nil, outer = false,
       qualifier = None, generatorOutput = Nil,
       child = org.apache.spark.sql.catalyst.plans.logical.OneRowRelation())
 
-  /** Idempotent runtime registration for ad-hoc sessions (same
-    * temp-function path as the graft codegen expressions). */
+  /** Installs the dialect in `spark` (idempotent) — its only install
+    * path. Opt-in, for sessions that run DuckDB oracle text: several
+    * aliases shadow Spark built-ins (2-arg `regexp_extract`, `len`,
+    * 1-arg `encode`), so [[graft.GraftExtensions]] leaves them out. */
   def register(spark: SparkSession): Unit = {
     aliases.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry

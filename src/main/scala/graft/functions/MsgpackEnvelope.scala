@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -129,9 +128,4 @@ object MsgpackEnvelope {
       case _ => null
     }
   } catch { case NonFatal(_) => null }
-
-  /** Registers `msgpack_envelope(binary) -> struct` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "msgpack_envelope", exprs => MsgpackEnvelope(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
@@ -81,8 +80,4 @@ object RollingHash {
   /** BigInt cross-check used by the spec: the definitionally-true value. */
   def hashBig(s: String): Long =
     s.getBytes("UTF-8").foldLeft(BigInt(0))((a, b) => (a * 257 + (b & 0xff)) % BigInt(M)).toLong
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -82,15 +81,4 @@ case class ShinglesN(child: Expression, n: Int) extends UnaryExpression {
 
 object ShinglesN {
   private[functions] val SEP = UTF8String.fromString(" ")
-}
-
-/** Session registration for both shingle spellings. */
-object Shingles3 {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles3", exprs => ShinglesN(exprs.head, 3), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles_n", exprs => ShinglesN(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-  }
 }

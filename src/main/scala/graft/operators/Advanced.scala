@@ -173,7 +173,6 @@ object Advanced {
     * exec) — one merge pass per key group instead of join + window.
     * Shares q_asof_join's oracle (identical results by construction). */
   def qAsofJoinNative(s: SparkSession, d: String): DataFrame = {
-    graft.plans.AsOfStrategy.register(s)
     val ev = Tables.events(s, d).select(
       col("event_id"), col("user_id"),
       expr("ts - make_interval(0, 0, 0, 8000 + (event_id * 13) % 6000, 0, 0, 0)").as("cutoff"))

@@ -51,9 +51,9 @@ object Dedup {
       .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("keep_id"))
       .filter(col("n_copies") > 1)
 
-  /** Word 3-gram shingles: the fused codegen [[graft.functions.Shingles3]]
-    * expression (registered by [[withSignature]]/the query builders; the
-    * HOF twin below remains the independent cross-check in PipelineSpec).
+  /** Word 3-gram shingles: the fused codegen [[graft.functions.ShinglesN]]
+    * expression (the HOF twin below remains the independent cross-check
+    * in PipelineSpec).
     * Guarded for documents under 3 words: short docs yield an empty
     * shingle list — matching DuckDB's range(1, len-1) behavior. Latent
     * in this corpus (docs are ≥10 words) but required for general
@@ -81,8 +81,6 @@ object Dedup {
     //   transform(sequence(0,15), k -> array_min(transform(hashes,
     //     h -> ((2654435761 + 40503*k)*h + 2654435769*k + 97) % 2147483647)))
     // — same constants as the oracle, fused single pass.
-    graft.functions.MinHashPerms.register(df.sparkSession)
-    graft.functions.Shingles3.register(df.sparkSession)
     df.withColumn("words", split(col("text"), " "))
       .withColumn("shingles", expr(shinglesExpr))
       .withColumn("hashes", expr(baseHashExpr))
@@ -328,7 +326,6 @@ object Dedup {
     * decontamination already maintains); arrivals anti-join it on the
     * gram key — one shuffle each side, never quadratic. */
   def qNgramNovelty(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
     val grams = corpus(s, d)
       .withColumn("words", split(col("text"), " "))
       .select(col("doc_id"), explode(expr(shinglesExpr)).as("g"))
@@ -708,7 +705,6 @@ object Dedup {
     * recursive CTE; PipelineSpec asserts reassembly and edit-stability
     * properties. */
   def qDedupCdcChunks(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CdcBoundaries.register(s)
     corpus(s, d)
       .withColumn("bounds", expr("cdc_boundaries(text)"))
       .withColumn("chunks", expr(
@@ -1426,13 +1422,11 @@ object Dedup {
     * (a_id, b_id) — uniform by construction. */
   /** The interpreted-HOF twin of [[graft.functions.WinnowFps]] — kept as
     * the independent parity reference in PipelineSpec (same pattern as
-    * shinglesHofExpr ↔ Shingles3). */
+    * shinglesHofExpr ↔ ShinglesN). */
   private[graft] val winnowHofExpr =
     "array_distinct(IF(size(hashes) >= 4, transform(sequence(0, size(hashes) - 4), i -> array_min(slice(hashes, i + 1, 4))), array(array_min(hashes))))"
 
   def qDedupWinnow(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
-    graft.functions.WinnowFps.register(s)
     // the posting relation feeds three plan branches (df counts + both
     // sides of the pair join); the extraction above it — shingling, md5
     // hashing, per-window mins — is the dominant cost, so it runs as the
@@ -1791,7 +1785,6 @@ object Dedup {
     * inspection of the returned frame sees only literals. */
   def qDedupEval(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    graft.functions.Shingles3.register(s)
     val sample = corpus(s, d).filter(col("doc_id") % 2 === 0)
     // SER levels throughout: the round-11 bench oscillation's prime
     // suspect was cross-query executor-memory pressure evicting these

@@ -297,7 +297,6 @@ object Gateway {
   def qMsgpackRoundtrip(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Msgpack
     import org.apache.spark.sql.functions.udf
-    graft.functions.MsgpackEnvelope.register(s)
     val enc = udf((mod: String, fun: String, arg: Long, wxuser: String) =>
       Msgpack.encode(Map("mod" -> mod, "fun" -> fun, "arg" -> arg,
         "ctx" -> Map("wxuser" -> wxuser))))

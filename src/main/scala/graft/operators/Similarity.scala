@@ -30,7 +30,6 @@ object Similarity {
 
   /** Brute-force cosine top-5 per query (every 20th vector is a query). */
   def qSimTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val queries = e.filter(col("vec_id") % 20 === 0)
@@ -58,7 +57,6 @@ object Similarity {
     * the IVF/LSH candidate generation in this module with the same
     * ranking tail. */
   def qHardNegatives(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"), col("label"))
     val anchors = e.filter(col("vec_id") % 25 === 0)
@@ -90,7 +88,6 @@ object Similarity {
     * WindowGroupLimit top-5) — refresh cost ∝ batch size, not corpus
     * size. */
   def qSimTopkIncremental(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val queries = e.filter(col("vec_id") % 20 === 0)
@@ -179,7 +176,6 @@ object Similarity {
     * identity. Ranking ties break on the 6-dp-rounded augmented cosine
     * then c_id — deterministic in both engines. */
   def qSimMips(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // codegen dot product (identical fold order to the HOF form — see
     // functions.DotProductD); the oracle keeps the list_transform fold
     val dotSelf = "dot_d(emb, emb)"
@@ -244,7 +240,6 @@ object Similarity {
   }
 
   def qSimSq8(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val coded = sq8Coded(s, d)
     val queries = coded.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id").as("q_id"), col("code").as("qc"), col("ce").as("qe"))
@@ -276,7 +271,6 @@ object Similarity {
     * the eval you run on a query SAMPLE before trusting the compressed
     * index — the plan shape is sample-size, not corpus-size. */
   def qNdcgEval(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val coded = sq8Coded(s, d)
     val queries = coded.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id").as("q_id"), col("code").as("qc"), col("ce").as("qe"))
@@ -327,8 +321,6 @@ object Similarity {
     * even the sign bits; PipelineSpec additionally checks recall vs
     * [[qSimTopK]]. */
   def qSimAnnLsh(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    graft.functions.HyperplaneCodes.register(s)
     val n = Tables.parquetRowCount(s, d, "embeddings")
     val bits = math.max(4, math.min(12, 64 - java.lang.Long.numberOfLeadingZeros(n - 1) - 2))
     val e = Tables.embeddings(s, d)
@@ -378,7 +370,6 @@ object Similarity {
     * ~linearly with n — the property the single fixed-width bucket of
     * round 1 lacked (its within-bucket pair count was O(n²/2^bits)). */
   private def bandedCodes(corpus: DataFrame, n: Long, bands: Int): DataFrame = {
-    graft.functions.HyperplaneCodes.register(corpus.sparkSession)
     // ceil(log2(n/4)) derived integer-exactly as bitLength(n-1) - 2: float
     // log could land an ulp above an exact power of two and ceil one wider
     // than the oracle's LOG2. The SQL side uses the same bit-length form.
@@ -414,7 +405,6 @@ object Similarity {
     * re-derived in SQL from the corpus count); PipelineSpec asserts
     * injected-pair recall and near-linear candidate growth. */
   def qSimNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val corpus = neardupCorpus(s, d)
     val va = corpus.select(col("vec_id").as("a_id"), col("ce").as("qe"))
     val vb = corpus.select(col("vec_id").as("b_id"), col("ce"))
@@ -445,7 +435,6 @@ object Similarity {
     * map-side; the within-cell pair join is one equi-join shuffle on
     * the cell id. */
   def qSemanticDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val corpus = graft.CacheTracker.track(neardupCorpus(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val nBase = Tables.parquetRowCount(s, d, "embeddings")
@@ -549,7 +538,6 @@ object Similarity {
   }
 
   def qSimIvf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // the corpus feeds 2 train assignments + the index pass + the probe
     // pass — persist so the parquet scan and float cast run once across
     // ALL of them (at cluster scale this is the materialized
@@ -685,7 +673,6 @@ object Similarity {
     * GC stale generations — only when either fingerprint lacks
     * `_SUCCESS`, and served as they are otherwise. */
   private def buildIvfAtRest(s: SparkSession, d: String): (java.io.File, java.io.File) = {
-    graft.functions.VectorFunctions.register(s)
     val dirs @ (cellsDir, centsDir) = ivfIndexDirs(s, d)
     graft.AtRest.buildOnce(cellsDir, centsDir) {
       val e = graft.CacheTracker.track(Tables.embeddings(s, d)
@@ -723,7 +710,6 @@ object Similarity {
     * lets a 100 TB store refresh in minutes (cost ∝ |arrivals|, one
     * map-side broadcast argmin) instead of re-clustering nightly. */
   def qSimIvfIncremental(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = graft.CacheTracker.track(Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -769,7 +755,6 @@ object Similarity {
     * integers; the only float is the final recall division. */
   def qIvfProbeSweep(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    graft.functions.VectorFunctions.register(s)
     val e = graft.CacheTracker.track(Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
       .persist(StorageLevel.MEMORY_AND_DISK))
@@ -874,7 +859,6 @@ object Similarity {
     * exact integers. */
   def qMatryoshkaRecall(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    graft.functions.VectorFunctions.register(s)
     val e = graft.CacheTracker.track(Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
       .persist(StorageLevel.MEMORY_AND_DISK))
@@ -1033,7 +1017,6 @@ object Similarity {
         expr(d6("sub", "cent")).as("d6"))
 
   def qSimPq(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
     val cents = pqCodebooksLit(e)
@@ -1093,7 +1076,6 @@ object Similarity {
     * a prefix of the same distance ordering, so candidates at nprobe n
     * are a subset of candidates at n+1 — asserted in PipelineSpec. */
   private[graft] def ivfPqCandidates(s: SparkSession, d: String, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
     val coarse = ivfCentroidsLit(e, k = ivfKOf(s, d))
@@ -1106,7 +1088,6 @@ object Similarity {
   }
 
   private[graft] def ivfPqSearch(s: SparkSession, d: String, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // persisted through both trainings AND the index/encode/probe
     // passes; released by the harness via CacheTracker
     val e = graft.CacheTracker.track(Tables.embeddings(s, d)
@@ -1165,7 +1146,6 @@ object Similarity {
   def qSimIvfPqRes(s: SparkSession, d: String): DataFrame = ivfPqResidualSearch(s, d, nprobe = 2)
 
   private[graft] def ivfPqResidualSearch(s: SparkSession, d: String, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = graft.CacheTracker.track(Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -1265,7 +1245,6 @@ object Similarity {
     * rows. Determinism: cosine rounded to 6 dp with c_id tie-break
     * (the q_sim_topk contract), vote ties break on the label value. */
   def qKnnClassify(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ce"), col("label"))
     val test = e.filter(col("vec_id") % 20 === 0)
@@ -1343,7 +1322,6 @@ object Similarity {
     * fold and Spark's HALF_UP rounding exactly, so the unrolled DuckDB
     * oracle still hash-matches. */
   def qMmrDiversify(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val q = e.filter(col("vec_id") === 0).select(col("emb").as("qe"))

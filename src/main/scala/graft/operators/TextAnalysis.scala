@@ -335,7 +335,6 @@ object TextAnalysis {
     * Scale shape: one gram-explode aggregate (map-side combined) +
     * top-65 selection; everything after runs on 65 rows. */
   def qHillTail(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
     val freqs = Tables.documents(s, d)
       .select(split(lower(col("text")), " ").as("words"))
       .select(explode(expr("shingles3(words)")).as("tok"))
@@ -415,7 +414,6 @@ object TextAnalysis {
     * 10-group aggregates, a 10-row window — no step scans the corpus
     * more than once, at any size. */
   def qHeapsLaw(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
     // max(…, 1) guards the empty corpus (identical for any real one)
     val n = math.max(Tables.parquetRowCount(s, d, "documents"), 1L)
     // the TYPE unit is the word 3-gram: this corpus' word vocabulary is
@@ -501,7 +499,6 @@ object TextAnalysis {
     * code points in HUGEINT; PipelineSpec additionally cross-checks the
     * codegen path against plain-Scala and BigInt references. */
   def qRollingFingerprint(s: SparkSession, d: String): DataFrame = {
-    graft.functions.RollingHash.register(s)
     Tables.documents(s, d)
       .selectExpr("doc_id", "rolling_hash(text) AS fp_rolling",
         "rolling_hash(text) % 1024 AS shard")
@@ -517,7 +514,6 @@ object TextAnalysis {
     * The profile tables are literals so the whole operator stays
     * map-side. */
   def qLangidNgram(s: SparkSession, d: String): DataFrame = {
-    graft.functions.BigramHits.register(s)
     // fused byte-scan count per profile (codepoint-exact for ASCII
     // profiles; the HOF twin is the parity reference in the spec)
     def score(name: String, prof: Seq[String]) =
@@ -595,7 +591,6 @@ object TextAnalysis {
     * 50-row results (bounded by construction, never a global sort of
     * the corpus); the fusion join touches ≤100 rows. */
   def qRrfFusion(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val wb = Window.orderBy(desc("score"), col("doc_id"))
     val bmRank = bm25Scored(s, d)
       .orderBy(desc("score"), col("doc_id")).limit(50)
@@ -685,7 +680,6 @@ object TextAnalysis {
     * BROADCAST semi-join — the only shuffle is the per-doc overlap
     * count. Output: contaminated docs with gram counts + overlap ratio. */
   def qDecontaminate(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
     // fused codegen 5-grams (byte-identical to the HOF slice/concat form)
     def grams5(arr: String) = s"shingles_n($arr, 5)"
     val docs = Tables.documents(s, d)
@@ -719,7 +713,6 @@ object TextAnalysis {
     * spec proves the gated pipeline is byte-identical to the ungated one
     * even with a deliberately coarse (high-FP) filter. */
   def qDecontaminateBloom(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
     def grams5(arr: String) = s"shingles_n($arr, 5)"
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
@@ -839,7 +832,6 @@ object TextAnalysis {
     * aggregations, both keyed by doc_id, so the data shuffles once and
     * stays partitioned for the second agg. */
   def qGopherQuality(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
     val w = Tables.documents(s, d)
       .withColumn("words", split(col("text"), " "))
       .withColumn("n_words", size(col("words")))
@@ -950,7 +942,6 @@ object TextAnalysis {
     * EXACT score the deployed classifier computes, so the feature
     * concat and weight formula must not drift between the two. */
   private def classifierWsum(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Shingles3.register(s)
     Tables.documents(s, d)
       .withColumn("words", split(col("text"), " "))
       .withColumn("fts", expr("concat(words, shingles_n(words, 2))"))

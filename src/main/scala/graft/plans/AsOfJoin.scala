@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Cast, Expression, JoinedRow, SortOrder, UnaryExpression}
@@ -363,10 +362,4 @@ object AsOfStrategy extends SparkStrategy {
         widen(lk), widen(lt), widen(rk), widen(rt), widen(tie)) :: Nil
     case _ => Nil
   }
-
-  /** Idempotent registration on the session's experimental strategies. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
 }

@@ -27,9 +27,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * (semantic equality) and only with ≥2 distinct values (a 1-value IN
   * would be rewritten to EqualTo by OptimizeIn and re-derived forever).
   *
-  * Registered by [[graft.GraftExtensions]] via injectOptimizerRule; the
-  * hand-tuned q7 keeps its explicit pruning so it is optimal on ANY
-  * session.
+  * Runs in every session [[graft.Tables.configure]] builds (injected by
+  * [[graft.GraftExtensions]]); the hand-tuned q7 keeps its explicit
+  * pruning so it is optimal on a session without the extension too.
   */
 object DeriveInFilters extends Rule[LogicalPlan] {
 

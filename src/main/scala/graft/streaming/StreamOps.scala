@@ -203,7 +203,6 @@ object StreamOps {
       cellsDir: String, centsDir: String, outDir: String,
       deltaDir: Option[String] = None): Unit = {
     val s = batch.sparkSession
-    graft.functions.VectorFunctions.register(s)
     val q = batch.select(col("vec_id"), col("ce")).persist()
     try {
       if (!q.isEmpty) {
@@ -245,7 +244,6 @@ object StreamOps {
   private[graft] def ivfDeltaTick(batch: DataFrame, id: Long,
       centsDir: String, deltaDir: String): Unit = {
     val s = batch.sparkSession
-    graft.functions.VectorFunctions.register(s)
     val v = batch.select(col("vec_id"), col("ce")).persist()
     try {
       if (!v.isEmpty) {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{AsOfJoin, AsOfStrategy}
+import graft.plans.AsOfJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,7 +14,6 @@ import org.apache.spark.sql.functions._
 class AsOfJoinSpec extends SparkSpec {
 
   private def nativeAsof(l: DataFrame, r: DataFrame): DataFrame = {
-    AsOfStrategy.register(spark)
     val lp = l.queryExecution.analyzed
     val rp = r.queryExecution.analyzed
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =

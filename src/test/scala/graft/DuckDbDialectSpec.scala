@@ -108,27 +108,34 @@ class DuckDbDialectSpec extends SparkSpec {
     assert(df.collect()(0).getLong(0) == 6L)
   }
 
-  test("GraftExtensions carries the dialect: a fresh extensions session resolves the aliases") {
-    import org.apache.spark.sql.SparkSession
+  test("dialect is opt-in: a configured session has cosine_sim but no aliases") {
+    import org.apache.spark.sql.{AnalysisException, SparkSession}
     spark // force the shared session first so we can restore it
     val old = SparkSession.getDefaultSession
     // getOrCreate would return the SHARED session (whose registry this
     // suite already touched via register()) — clear it so the builder
-    // makes a genuinely fresh session whose only dialect path is the
-    // extensions injection
+    // makes a genuinely fresh session; in-memory catalog so the failed
+    // function lookup below does not open a second metastore
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
+    val s2 = Tables.configure(SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
+      .config("spark.sql.catalogImplementation", "in-memory"))
       .getOrCreate()
     try {
-      val r = s2.sql("SELECT list_min(range(3, 9)) AS m, len(string_split('x y', ' ')) AS n")
-        .collect()(0)
-      assert(r == Row(3L, 2))
+      def one(q: String): Any = s2.sql(q).collect()(0).get(0)
+      assert(one("SELECT cosine_sim(array(1.0D, 0D), array(1.0D, 0D))") == 1.0)
+      val e = intercept[AnalysisException](one("SELECT string_split('x y', ' ')"))
+      assert(e.getCondition == "UNRESOLVED_ROUTINE", e.getMessage)
+      // Spark's 2-arg regexp_extract: group 1, not DuckDB's whole match
+      assert(one("SELECT regexp_extract('ab12cd', '([a-z])([0-9])')") == "b")
+      functions.DuckDbDialect.register(s2)
+      assert(s2.sql("SELECT list_min(range(3, 9)) AS m, len(string_split('x y', ' ')) AS n")
+        .collect()(0) == Row(3L, 2))
       assert(s2.sql("SELECT i FROM unnest(range(0, 2)) AS t(i)").count() == 2L)
+      assert(one("SELECT regexp_extract('ab12cd', '([a-z])([0-9])')") == "b1")
     } finally old.foreach { o =>
       SparkSession.setDefaultSession(o)
       SparkSession.setActiveSession(o)

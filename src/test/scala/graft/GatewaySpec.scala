@@ -114,8 +114,7 @@ class GatewaySpec extends SparkSpec {
   }
 
   test("msgpack_envelope: typed struct decode; NULL on malformed bytes") {
-    import graft.functions.{Msgpack, MsgpackEnvelope}
-    MsgpackEnvelope.register(spark)
+    import graft.functions.Msgpack
     import spark.implicits._
     val good = Msgpack.encode(Map(
       "mod" -> "wx", "fun" -> "call", "arg" -> 7L, "ctx" -> Map("wxuser" -> "u1")))

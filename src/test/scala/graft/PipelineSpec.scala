@@ -112,7 +112,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("codegen shingles3 is byte-identical to the interpreted HOF form, edges included") {
-    graft.functions.Shingles3.register(spark)
     val w = Dedup.corpus(spark, sf).withColumn("words", split(col("text"), " "))
     assert(w.filter(expr(Dedup.shinglesExpr) =!= expr(Dedup.shinglesHofExpr)).count() == 0)
     // short-doc edges: 0/1/2 words → empty, exactly 3 → one shingle
@@ -132,7 +131,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("bigram_hits byte scan matches the HOF bigram filter, multibyte text included") {
-    graft.functions.BigramHits.register(spark)
     val profile = Seq("th", "he", "in", "er", "an")
     val hof = s"""size(filter(transform(sequence(1, length(text) - 1),
       i -> substring(text, i, 2)), b -> b IN ('th','he','in','er','an')))"""
@@ -694,8 +692,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("winnow_fps codegen is identical to the interpreted HOF form, edges included") {
-    graft.functions.Shingles3.register(spark)
-    graft.functions.WinnowFps.register(spark)
     val h = Dedup.corpus(spark, sf)
       .withColumn("words", split(col("text"), " "))
       .withColumn("shingles", expr(Dedup.shinglesExpr))
@@ -1824,7 +1820,6 @@ class PipelineSpec extends SparkSpec {
     assert(g.filter(col("q_label") === col("neg_label")).count() == 0)
     assert(g.filter(col("cosine") < -1.0 || col("cosine") > 1.0).count() == 0)
     // brute force replay over the full cross join (500 vectors at sf0.001)
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"), col("label"))
     val a = e.filter(col("vec_id") % 25 === 0)
@@ -2040,7 +2035,6 @@ class PipelineSpec extends SparkSpec {
     val g = Similarity.qSimTopkIncremental(spark, sf).cache()
     assert(g.groupBy("q_id").count().filter(col("count") =!= 5).count() == 0)
     // the merge must equal brute force over everything (rank monotonicity)
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val q = e.filter(col("vec_id") % 20 === 0)

@@ -4,8 +4,8 @@ package graft
   * every one of the ~291 oracle SQL strings — the ANSI text DuckDB
   * executes as the correctness oracle — is swept through `spark.sql`
   * against the Hive-catalog tables WITH the graft DuckDB-dialect alias
-  * layer installed ([[functions.DuckDbDialect]] — the same surface a
-  * production session gets from GraftExtensions), and the outcome is
+  * layer installed ([[functions.DuckDbDialect]], opt-in through its
+  * `register`: engine sessions do not carry it), and the outcome is
   * pinned three ways with ZERO silent skips:
   *
   *   - **identical**: strict driver-style canon (columns sorted by
@@ -99,9 +99,8 @@ class SqlCompatSpec extends SparkSpec {
 
   test("all oracle SQL via spark.sql: identical, value-equal-typed, or documented — zero silent skips") {
     CatalogFixture.registerCatalogTables(spark, sf)
-    // the production catalog session carries the DuckDB-dialect aliases
-    // via GraftExtensions; ad-hoc sessions get them from register() —
-    // the sweep measures THAT surface (SURVEY round-15 addendum)
+    // the DuckDB-dialect aliases are opt-in: the sweep installs them
+    // and measures THAT surface (SURVEY round-15 addendum)
     functions.DuckDbDialect.register(spark)
     spark.sql(s"USE ${CatalogFixture.db}")
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -14,8 +14,9 @@ For each candidate:
      match (check.py canon) — the rewrite must not change the oracle's
      answer.
   2. SPARK: run the SAME new text through pyspark with the compiled graft
-     classes + GraftExtensions (the exact alias surface a production
-     session gets) over raw-parquet temp views (what the catalog tables
+     classes, GraftExtensions and the DuckDB-dialect aliases installed by
+     DuckDbDialect.register (the surface SqlCompatSpec sweeps) over
+     raw-parquet temp views (what the catalog tables
      serve); cols+rows+hash must match the DuckDB result. Because the
      driver gate already proves DataFrame-form == DuckDB, SPARK==DUCK
      implies the SqlCompatSpec matrix will read "identical" (modulo its
@@ -135,6 +136,7 @@ def main():
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.sql.analyzer.failAmbiguousSelfJoin", "false")
              .getOrCreate())
+    spark._jvm.graft.functions.DuckDbDialect.register(spark._jsparkSession)
     spark.sparkContext.setLogLevel("ERROR")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:

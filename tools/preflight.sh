@@ -6,16 +6,24 @@
 #
 #   tools/preflight.sh            # compile + tests + sf0.001 Verify + oracle check
 #                                 # + the benchmark helpers' unit tests
-#   tools/preflight.sh --fast     # run only the harness specs instead of the
-#                                 # full ScalaTest suite
+#   tools/preflight.sh --fast     # run only the harness and session-surface
+#                                 # specs instead of the full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# One session surface: functions and strategies reach a session only
+# through GraftExtensions (installed by Tables.configure) or the opt-in
+# DuckDbDialect.register — no second registration path in src/main.
+if grep -rnE 'createOrReplaceTempFunction|extraStrategies|injectFunction' src/main \
+    | grep -vE '^src/main/scala/graft/(GraftExtensions|functions/DuckDbDialect)\.scala:'; then
+  echo "registration outside GraftExtensions/DuckDbDialect (listed above)" >&2
+  exit 1
+fi
 sbt -batch "compile; Test/compile" | tail -2
 if [[ "${1:-}" != "--fast" ]]; then
   sbt -batch test | tail -3
 else
-  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec" | tail -3
+  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec graft.ExtensionsSpec graft.DuckDbDialectSpec" | tail -3
 fi
 OUT=/tmp/preflight_verify
 rm -rf "$OUT"
