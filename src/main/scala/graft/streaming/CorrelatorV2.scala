@@ -21,9 +21,8 @@ import Correlator.{Correlated, GwEvent}
   *
   * State is partitioned by `sn` and is O(1) per key, freed on match or
   * timeout, so total state is bounded by the in-flight window, not the
-  * stream length. The `ValueState` and timers need the RocksDB state
-  * store (set `spark.sql.streaming.stateStore.providerClass` to
-  * RocksDBStateStoreProvider).
+  * stream length. The `ValueState` and timers live in the RocksDB state
+  * store, which every session built by [[graft.Tables.configure]] uses.
   */
 object CorrelatorV2 {
 

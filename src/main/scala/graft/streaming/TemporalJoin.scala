@@ -72,8 +72,9 @@ object TemporalJoin {
   }
 
   /** Enrich the `event`-kind rows of a unioned dim/event stream with the
-    * latest at-or-before dim version per key. Requires the RocksDB state
-    * store (transformWithState). */
+    * latest at-or-before dim version per key. transformWithState keeps
+    * the history in the RocksDB state store, which every session built by
+    * [[graft.Tables.configure]] uses. */
   def enrich(input: Dataset[In], watermarkDelay: String = "10 seconds"): Dataset[Enriched] = {
     val spark = input.sparkSession
     import spark.implicits._

@@ -4,25 +4,15 @@ import java.sql.Timestamp
 
 import graft.streaming.AbStream
 import graft.streaming.AbStream.{DayZ, Ev}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming sequential A/B monitor must emit exactly the batch
   * decision sequence ([[operators.EventWindows.qAbSequential]]): every
   * day finalizes once, in day order, with the identical cumulative
   * Welch z — fed the real corpus out of order through a MemoryStream.
   */
-class AbStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
-  val sf = "/root/testdata/sf0.001"
+class AbStreamSpec extends SparkSpec {
 
   test("streaming A/B monitor over the real corpus equals the batch query exactly") {
     implicit val sqlCtx = spark.sqlContext

@@ -2,29 +2,18 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.{Correlator, CorrelatorV2}
 import graft.streaming.Correlator.GwEvent
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The sn correlator ([[CorrelatorV2]], transformWithState on the RocksDB
   * state store) driven through MemoryStream: matched / unmatched /
   * timeout paths, the watermark boundary, checkpointed restart, sn reuse
   * and within-batch ordering; plus the temporal joins on the same
   * session setup. */
-class CorrelatorV2Spec extends AnyFunSuite {
-
-  // Reuse the JVM-wide session; the state-store provider is a session
-  // conf that only needs to be set before the streaming query STARTS
-  // (a builder conf would be silently dropped if another suite created
-  // the session first — getOrCreate returns the existing one).
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class CorrelatorV2Spec extends SparkSpec {
 
   private def ts(sec: Int): Timestamp = new Timestamp(1700000000000L + sec * 1000L)
 
@@ -111,6 +100,60 @@ class CorrelatorV2Spec extends AnyFunSuite {
         s"recovered timer must fire the timeout: $rows")
       assert(!rows.contains("flush"))
     } finally q2.stop()
+  }
+
+  /** Files under a checkpoint's state directory whose names end in `suffix`. */
+  private def stateFiles(ckpt: String, suffix: String): Seq[String] = {
+    val state = java.nio.file.Paths.get(ckpt, "state")
+    if (!java.nio.file.Files.exists(state)) Nil
+    else {
+      val walk = java.nio.file.Files.walk(state)
+      try walk.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(suffix)).toList
+      finally walk.close()
+    }
+  }
+
+  test("a checkpoint written without changelogs by the default file manager restores under the configured session") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft_corr_src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_corr_ckpt").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_corr_out").toString
+    // a file source, unlike a MemoryStream, can be read from two sessions
+    def start(s: org.apache.spark.sql.SparkSession) =
+      CorrelatorV2.correlate(
+        s.readStream.schema(Encoders.product[GwEvent].schema).parquet(src).as[GwEvent],
+        timeoutMs = 30000L, watermarkDelay = "5 seconds")
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+    // the first run uses Spark's defaults: snapshot-only RocksDB commits
+    // and the FileContext checkpoint file manager
+    val old = spark.newSession()
+    val fileContext = classOf[FileContextBasedCheckpointFileManager].getName
+    old.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false") // preflight: allow
+    old.conf.set("spark.sql.streaming.checkpointFileManagerClass", fileContext) // preflight: allow
+    Seq(GwEvent("a", "request", ts(0)), GwEvent("lost", "request", ts(1))).toDS()
+      .write.mode("append").parquet(src)
+    val q1 = start(old)
+    q1.processAllAvailable()
+    q1.stop()
+    assert(stateFiles(ckpt, ".zip").nonEmpty && stateFiles(ckpt, ".changelog").isEmpty,
+      "the first run must write snapshots only")
+    Seq(GwEvent("a", "response", ts(2)), GwEvent("flush", "request", ts(120))).toDS()
+      .write.mode("append").parquet(src)
+    val q2 = start(spark)
+    try {
+      q2.processAllAvailable()
+      val rows = spark.read.parquet(out).as[Correlator.Correlated].collect().toSeq
+      assert(rows.filter(_.sn == "a").map(c => (c.outcome, c.latency_ms)) == Seq(("matched", 2000L)),
+        s"recovered in-flight request must match: $rows")
+      assert(rows.filter(_.sn == "lost").map(_.outcome) == Seq("timeout"),
+        s"recovered timer must fire the timeout exactly once: $rows")
+      assert(!rows.exists(_.sn == "flush"))
+    } finally q2.stop()
+    // one batch under the configured session commits a changelog
+    assert(stateFiles(ckpt, ".changelog").nonEmpty, stateFiles(ckpt, ""))
   }
 
   test("sn reuse after a match: the first request's timer must not clobber the second") {

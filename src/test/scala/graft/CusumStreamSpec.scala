@@ -4,10 +4,8 @@ import java.sql.Timestamp
 
 import graft.streaming.CusumStream
 import graft.streaming.CusumStream.{DayStat, Ev}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming CUSUM must emit exactly the batch fold
   * ([[operators.EventWindows.qCusum]]) when given the same reference
@@ -15,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * boundary, so late events still land in their day, and the emitted
   * recurrence values match the batch query row for row.
   */
-class CusumStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
-  val sf = "/root/testdata/sf0.001"
+class CusumStreamSpec extends SparkSpec {
 
   private def gotStats(table: String): Set[(String, Long, Long, Long, Long, Boolean)] = {
     import spark.implicits._

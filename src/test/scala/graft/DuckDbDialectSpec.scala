@@ -9,13 +9,18 @@ import org.apache.spark.sql.Row
   * happens to exercise the edge. Also proves the aliases stay inside
   * whole-stage codegen (no UDF fallback) and that the builtin-name
   * shadows (`len`, `regexp_extract`) preserve Spark behavior where
-  * DuckDB and Spark agree. */
+  * DuckDB and Spark agree. The dialect goes into its own session, which
+  * shares the catalog but not the function registry, so the shared
+  * session keeps Spark's built-ins for every later suite. */
 class DuckDbDialectSpec extends SparkSpec {
 
-  private def sql1(q: String): Any = {
-    functions.DuckDbDialect.register(spark)
-    spark.sql(q).collect()(0).get(0)
+  private lazy val dialect = {
+    val s = spark.newSession()
+    functions.DuckDbDialect.register(s)
+    s
   }
+
+  private def sql1(q: String): Any = dialect.sql(q).collect()(0).get(0)
 
   test("string_split: literal (non-regex) delimiter, empty fields kept") {
     assert(sql1("SELECT string_split('a  b', ' ')") ==
@@ -93,14 +98,12 @@ class DuckDbDialectSpec extends SparkSpec {
   }
 
   test("FROM unnest(...) resolves as a table function") {
-    functions.DuckDbDialect.register(spark)
-    val rows = spark.sql("SELECT i FROM unnest(range(1, 4)) AS t(i)").collect()
+    val rows = dialect.sql("SELECT i FROM unnest(range(1, 4)) AS t(i)").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
   }
 
   test("aliases stay codegen'd: no UDF/eval fallback in the physical plan") {
-    functions.DuckDbDialect.register(spark)
-    val df = spark.sql(
+    val df = dialect.sql(
       "SELECT list_sum(list_transform(string_split('1 2 3', ' '), x -> CAST(x AS INT))) AS s")
     val physical = df.queryExecution.executedPlan.toString
     assert(!physical.contains("BatchEvalPython") && !physical.contains("ScalaUDF"),
@@ -109,36 +112,26 @@ class DuckDbDialectSpec extends SparkSpec {
   }
 
   test("dialect is opt-in: a configured session has cosine_sim but no aliases") {
-    import org.apache.spark.sql.{AnalysisException, SparkSession}
-    spark // force the shared session first so we can restore it
-    val old = SparkSession.getDefaultSession
-    // getOrCreate would return the SHARED session (whose registry this
-    // suite already touched via register()) — clear it so the builder
-    // makes a genuinely fresh session; in-memory catalog so the failed
-    // function lookup below does not open a second metastore
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = Tables.configure(SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalogImplementation", "in-memory"))
-      .getOrCreate()
-    try {
-      def one(q: String): Any = s2.sql(q).collect()(0).get(0)
-      assert(one("SELECT cosine_sim(array(1.0D, 0D), array(1.0D, 0D))") == 1.0)
-      val e = intercept[AnalysisException](one("SELECT string_split('x y', ' ')"))
-      assert(e.getCondition == "UNRESOLVED_ROUTINE", e.getMessage)
-      // Spark's 2-arg regexp_extract: group 1, not DuckDB's whole match
-      assert(one("SELECT regexp_extract('ab12cd', '([a-z])([0-9])')") == "b")
-      functions.DuckDbDialect.register(s2)
-      assert(s2.sql("SELECT list_min(range(3, 9)) AS m, len(string_split('x y', ' ')) AS n")
-        .collect()(0) == Row(3L, 2))
-      assert(s2.sql("SELECT i FROM unnest(range(0, 2)) AS t(i)").count() == 2L)
-      assert(one("SELECT regexp_extract('ab12cd', '([a-z])([0-9])')") == "b1")
-    } finally old.foreach { o =>
-      SparkSession.setDefaultSession(o)
-      SparkSession.setActiveSession(o)
-    }
+    import org.apache.spark.sql.AnalysisException
+    // a new session of the shared, Tables.configure-built one: same
+    // extensions, fresh function registry
+    val s2 = spark.newSession()
+    def one(q: String): Any = s2.sql(q).collect()(0).get(0)
+    assert(one("SELECT cosine_sim(array(1.0D, 0D), array(1.0D, 0D))") == 1.0)
+    val e = intercept[AnalysisException](one("SELECT string_split('x y', ' ')"))
+    assert(e.getCondition == "UNRESOLVED_ROUTINE", e.getMessage)
+    // Spark's 2-arg regexp_extract: group 1, not DuckDB's whole match
+    assert(one("SELECT regexp_extract('ab12cd', '([a-z])([0-9])')") == "b")
+    functions.DuckDbDialect.register(s2)
+    assert(s2.sql("SELECT list_min(range(3, 9)) AS m, len(string_split('x y', ' ')) AS n")
+      .collect()(0) == Row(3L, 2))
+    assert(s2.sql("SELECT i FROM unnest(range(0, 2)) AS t(i)").count() == 2L)
+    assert(one("SELECT regexp_extract('ab12cd', '([a-z])([0-9])')") == "b1")
+  }
+
+  test("the shared session keeps Spark's built-ins after the dialect was registered") {
+    // runs last: every case above registered the dialect in a session of its own
+    assert(SparkSpec.session.sql("SELECT regexp_extract('ab12cd', '([a-z])([0-9])')")
+      .collect()(0).get(0) == "b")
   }
 }

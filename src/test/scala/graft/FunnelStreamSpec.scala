@@ -4,25 +4,14 @@ import java.sql.Timestamp
 
 import graft.streaming.FunnelStream
 import graft.streaming.FunnelStream.{FunnelEvent, FunnelReach, Unreached}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming funnel (transformWithState per-user min-state) checked
   * against the batch conditional-min cascade — including retroactive
   * eligibility from out-of-order arrivals, which is the case a naive
   * "keep the running mins" state gets wrong. */
-class FunnelStreamSpec extends AnyFunSuite {
-
-  // Same session contract as CorrelatorV2Spec: the RocksDB provider conf
-  // must be set before the streaming query starts.
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class FunnelStreamSpec extends SparkSpec {
 
   private def ts(sec: Int): Timestamp = new Timestamp(1700000000000L + sec * 1000L)
 

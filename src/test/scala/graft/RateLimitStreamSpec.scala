@@ -4,25 +4,14 @@ import java.sql.Timestamp
 
 import graft.streaming.RateLimitStream
 import graft.streaming.RateLimitStream.{ApiCall, LimitStats}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming rate limiter (transformWithState watermark-finalized
   * trailing-window counts) checked against the batch G6 window query —
   * including a late earlier call that retroactively pushes an
   * already-seen call over the limit, the case an admit-at-arrival
   * limiter gets wrong. */
-class RateLimitStreamSpec extends AnyFunSuite {
-
-  // Same session contract as CorrelatorV2Spec/FunnelStreamSpec: RocksDB
-  // provider conf before the streaming query starts.
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class RateLimitStreamSpec extends SparkSpec {
 
   private val base = 1700000000000L
   private def ts(ms: Long): Timestamp = new Timestamp(base + ms)

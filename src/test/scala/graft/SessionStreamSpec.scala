@@ -4,23 +4,14 @@ import java.sql.Timestamp
 
 import graft.streaming.SessionStream
 import graft.streaming.SessionStream.{Ev, Session}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming sessionizer must emit exactly the batch lag-gap
   * sessions — including when a late-arriving middle event BRIDGES two
   * event runs that a naive arrival-order sessionizer would have split
   * into separate sessions (the watermark-finalization contract).
   */
-class SessionStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class SessionStreamSpec extends SparkSpec {
 
   private val base = 1700000000000L
   private def ts(minutes: Long): Timestamp = new Timestamp(base + minutes * 60000L)

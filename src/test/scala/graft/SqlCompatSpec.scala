@@ -98,11 +98,14 @@ class SqlCompatSpec extends SparkSpec {
       .getOrElse("<no message>").trim.take(160)
 
   test("all oracle SQL via spark.sql: identical, value-equal-typed, or documented — zero silent skips") {
-    CatalogFixture.registerCatalogTables(spark, sf)
-    // the DuckDB-dialect aliases are opt-in: the sweep installs them
-    // and measures THAT surface (SURVEY round-15 addendum)
-    functions.DuckDbDialect.register(spark)
-    spark.sql(s"USE ${CatalogFixture.db}")
+    // the DuckDB-dialect aliases are opt-in: the sweep installs them in
+    // a session of its own (shared catalog, own function registry, so
+    // later suites keep Spark's built-ins) and measures THAT surface
+    // (SURVEY round-15 addendum)
+    val duck = spark.newSession()
+    functions.DuckDbDialect.register(duck)
+    CatalogFixture.registerCatalogTables(duck, sf)
+    duck.sql(s"USE ${CatalogFixture.db}")
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]
     val outcomes = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val secs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -123,8 +126,8 @@ class SqlCompatSpec extends SparkSpec {
         // Left(reason)=error or value divergence
         def compare(): Either[String, Boolean] =
           try {
-            val viaSql = spark.sql(sql)
-            val viaDf = SparkEntry.queries(name)(spark, sf)
+            val viaSql = duck.sql(sql)
+            val viaDf = SparkEntry.queries(name)(duck, sf)
             if (CatalogFixture.canon(viaSql) == CatalogFixture.canon(viaDf)) Right(true)
             else if (CatalogFixture.canonLoose(viaSql) == CatalogFixture.canonLoose(viaDf)) Right(false)
             else {
@@ -135,7 +138,7 @@ class SqlCompatSpec extends SparkSpec {
             }
           } catch {
             case t: Throwable => Left(s"${t.getClass.getSimpleName}: ${firstLine(t.getMessage)}")
-          } finally CacheTracker.releaseQueryScope(spark)
+          } finally CacheTracker.releaseQueryScope(duck)
 
         // Per-query TIME BOX (r18, verdict item 1): unboxed, single
         // pathological texts ran this one-test suite past every driver
@@ -157,13 +160,13 @@ class SqlCompatSpec extends SparkSpec {
             import scala.concurrent.ExecutionContext.Implicits.global
             val grp = s"sqlcompat-$name"
             val fut = Future {
-              spark.sparkContext.setJobGroup(grp, name, interruptOnCancel = true)
-              try compare() finally spark.sparkContext.clearJobGroup()
+              duck.sparkContext.setJobGroup(grp, name, interruptOnCancel = true)
+              try compare() finally duck.sparkContext.clearJobGroup()
             }
             try Await.result(fut, boxSec.seconds)
             catch {
               case _: java.util.concurrent.TimeoutException =>
-                spark.sparkContext.cancelJobGroup(grp)
+                duck.sparkContext.cancelJobGroup(grp)
                 try Await.result(fut, 120.seconds)
                 catch { case t: Throwable =>
                   problems += s"$name: job-group cancel did not unwind in 120 s (${t.getClass.getSimpleName})"
@@ -223,6 +226,6 @@ class SqlCompatSpec extends SparkSpec {
           .getBytes("UTF-8"))
       info(s"${outcomes.size} oracle SQL texts: $nIdent identical, $nType value-equal/type-differs, $nInc incompatible (documented), $nSlow timeboxed-slow (documented)")
       assert(problems.isEmpty, s"${problems.size} matrix drift(s):\n${problems.mkString("\n")}")
-    } finally spark.sql("USE default")
+    } finally duck.sql("USE default")
   }
 }

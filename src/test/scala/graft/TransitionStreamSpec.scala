@@ -4,23 +4,14 @@ import java.sql.Timestamp
 
 import graft.streaming.TransitionStream
 import graft.streaming.TransitionStream.{Ev, Transition}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming transition matrix must emit exactly the batch lead()
   * pairing — including when an earlier event arrives late and splices
   * itself between two already-seen events (which must NOT have paired
   * yet: that is the watermark-finalization contract).
   */
-class TransitionStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class TransitionStreamSpec extends SparkSpec {
 
   private val base = 1700000000000L
   private def ts(ms: Long): Timestamp = new Timestamp(base + ms)

@@ -6,8 +6,9 @@
 #
 #   tools/preflight.sh            # compile + tests + sf0.001 Verify + oracle check
 #                                 # + the benchmark helpers' unit tests
-#   tools/preflight.sh --fast     # run only the harness and session-surface
-#                                 # specs instead of the full ScalaTest suite
+#   tools/preflight.sh --fast     # run only the harness, session-surface and
+#                                 # streaming-checkpoint specs instead of the
+#                                 # full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -19,11 +20,20 @@ if grep -rnE 'createOrReplaceTempFunction|extraStrategies|injectFunction' src/ma
   echo "registration outside GraftExtensions/DuckDbDialect (listed above)" >&2
   exit 1
 fi
+# One state-store surface: the provider, changelog and checkpoint-file
+# settings live only in Tables.sessionConfs. A line that must name one
+# (a test of a checkpoint written under other settings) says
+# "preflight: allow".
+if grep -rnE 'stateStore\.providerClass|changelogCheckpointing|checkpointFileManagerClass' src \
+    | grep -vE '^src/main/scala/graft/Tables\.scala:|preflight: allow'; then
+  echo "state-store setting outside Tables.scala (listed above)" >&2
+  exit 1
+fi
 sbt -batch "compile; Test/compile" | tail -2
 if [[ "${1:-}" != "--fast" ]]; then
   sbt -batch test | tail -3
 else
-  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec graft.ExtensionsSpec graft.DuckDbDialectSpec" | tail -3
+  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec graft.ExtensionsSpec graft.DuckDbDialectSpec graft.CheckpointFilesSpec graft.CorrelatorV2Spec graft.RateLimitStreamSpec" | tail -3
 fi
 OUT=/tmp/preflight_verify
 rm -rf "$OUT"
