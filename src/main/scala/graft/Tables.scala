@@ -50,8 +50,8 @@ object Tables {
     // are left to the maintenance thread instead of every commit.
     // Checkpoints written without changelogs restore unchanged.
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-    // local checkpoint files are renamed and probed without forking a shell
-    // process per file (graft.streaming.CheckpointFiles)
+    // local checkpoint files are created, renamed and probed without forking
+    // a shell process per file (graft.streaming.CheckpointFiles)
     "spark.sql.streaming.checkpointFileManagerClass" -> "graft.streaming.CheckpointFiles")
 
   /** The one session surface: [[sessionConfs]] plus [[GraftExtensions]]

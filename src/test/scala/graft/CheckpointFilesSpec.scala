@@ -2,18 +2,26 @@ package graft
 
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
 
 import graft.streaming.CheckpointFiles
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, DelegateToFileSystem, FileAlreadyExistsException, Path,
+  RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager}
 
 /** [[CheckpointFiles]] must behave like Spark's default
   * `FileContextBasedCheckpointFileManager` on a `file:` directory: every
   * case below runs against both. It must also pick its delegate by
-  * scheme, and be the manager a configured session's streams get. */
+  * scheme, give its files and directories the modes the default manager
+  * gives, start no process on a `file:` path, and be the manager a
+  * configured session's streams get. */
 class CheckpointFilesSpec extends SparkSpec {
 
   private val managers: Seq[(String, (Path, Configuration) => CheckpointFileManager)] = Seq(
@@ -49,6 +57,8 @@ class CheckpointFilesSpec extends SparkSpec {
         write(fm, p, "old", overwrite = false)
         intercept[FileAlreadyExistsException](write(fm, p, "new", overwrite = false))
         assert(read(fm, p) == "old")
+        // the default manager leaves the losing temp file and its .crc behind
+        if (fm.isInstanceOf[CheckpointFiles]) assert(names(dir) == Set("1", ".1.crc"), names(dir))
       }
     }
 
@@ -89,6 +99,56 @@ class CheckpointFilesSpec extends SparkSpec {
         assert(fm.exists(sub) && fm.list(sub).isEmpty)
         assert(fm.isLocal)
       }
+    }
+  }
+
+  test("CheckpointFiles: open checks the .crc of a file changed outside Hadoop") {
+    withManager((p, c) => new CheckpointFiles(p, c)) { (fm, dir) =>
+      val p = new Path(dir, "1")
+      write(fm, p, "committed", overwrite = false)
+      Files.write(Paths.get(p.toUri), "corrupted".getBytes(UTF_8)) // same length, no .crc update
+      intercept[ChecksumException](read(fm, p))
+    }
+  }
+
+  test("CheckpointFiles gives files, .crc files and directories the default manager's modes") {
+    def mode(dir: Path, name: String): String =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(Paths.get(new Path(dir, name).toUri)))
+    for (umask <- Seq(None, Some("077"))) {
+      val conf = new Configuration()
+      umask.foreach(conf.set("fs.permissions.umask-mode", _))
+      val dir = new Path(Files.createTempDirectory("graft_ckptmodes").toUri)
+      val modes = managers.map { case (name, make) =>
+        val fm = make(dir, conf)
+        write(fm, new Path(dir, name), name, overwrite = false)
+        fm.mkdirs(new Path(dir, s"$name.d"))
+        Seq(name, s".$name.crc", s"$name.d").map(mode(dir, _))
+      }
+      assert(modes.distinct.size == 1, s"umask $umask: $modes")
+      if (umask.isDefined) assert(modes.head == Seq("rw-------", "rw-------", "rwx------"), modes.head)
+    }
+  }
+
+  test("CheckpointFiles starts no process on a file: path") {
+    withManager((p, c) => new CheckpointFiles(p, c)) { (fm, dir) =>
+      val seen = new ConcurrentLinkedQueue[String]()
+      val running = new AtomicBoolean(true)
+      val poller = new Thread(() =>
+        while (running.get) ProcessHandle.current().descendants().iterator().asScala
+          .foreach(_.info().commandLine().ifPresent(seen.add(_))))
+      poller.start()
+      try (0 until 100).foreach { i => // 200 createAtomic calls
+        val sub = new Path(dir, s"d$i")
+        fm.mkdirs(sub)
+        write(fm, new Path(sub, "1"), s"v$i", overwrite = false)
+        write(fm, new Path(sub, "1"), s"w$i", overwrite = true)
+        assert(read(fm, new Path(sub, "1")) == s"w$i")
+      } finally {
+        running.set(false)
+        poller.join()
+      }
+      val root = new java.io.File(dir.toUri).getPath
+      assert(!seen.asScala.exists(_.contains(root)), seen.asScala.filter(_.contains(root)).take(5))
     }
   }
 

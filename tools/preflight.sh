@@ -29,6 +29,14 @@ if grep -rnE 'stateStore\.providerClass|changelogCheckpointing|checkpointFileMan
   echo "state-store setting outside Tables.scala (listed above)" >&2
   exit 1
 fi
+# One checkpoint-file path: Spark's checkpoint file managers and Hadoop's
+# raw local file system are named in src/main only by CheckpointFiles,
+# whose file: calls start no process.
+if grep -rnE 'FileContextBasedCheckpointFileManager|FileSystemBasedCheckpointFileManager|RawLocalFileSystem' src/main \
+    | grep -vE '^src/main/scala/graft/streaming/CheckpointFiles\.scala:'; then
+  echo "checkpoint file manager or raw local file system outside CheckpointFiles.scala (listed above)" >&2
+  exit 1
+fi
 sbt -batch "compile; Test/compile" | tail -2
 if [[ "${1:-}" != "--fast" ]]; then
   sbt -batch test | tail -3
