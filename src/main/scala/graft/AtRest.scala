@@ -327,43 +327,11 @@ object AtRest {
       p, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey
     catch { case _: java.io.IOException => null } // missing ⇒ unverifiable ⇒ retry
 
-  /** Test-only (CrossProcessAtRestSpec's mixed-mode case): a JVM
-    * launched with `-Dgraft.lock.legacy=true` acquires the maintenance
-    * lock with the PRE-r16 protocol — plain open + blocking lock, no
-    * fileKey verification, no [[heldLockPaths]] registry; verbatim the
-    * acquisition sequence this repo shipped through round 15. The swap
-    * and heal protocol is identical on both sides (the r16 diff was
-    * lock-acquisition only), so a legacy-flagged worker IS an old-code
-    * peer for lock-interop purposes, and the spec proves the
-    * registry/stat protocol degrades safely against one — production
-    * rollouts are never atomic, so for one deploy window every index
-    * tree has lockers of both generations. Read once at class load
-    * (one static boolean in production); never set outside tests. */
-  private[graft] val legacyLockProtocol: Boolean =
-    "true" == System.getProperty("graft.lock.legacy")
-
   private[graft] def withMaintenanceLock[T](dirPath: String)(body: => T): T = {
     val mon = maintMonitors.computeIfAbsent(monitorKey(dirPath), _ => new Object)
     mon.synchronized {
       val lockFile = new java.io.File(dirPath + ".maintlock")
       Option(lockFile.getParentFile).foreach(_.mkdirs())
-      if (legacyLockProtocol) {
-        val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          val l = ch.lock()
-          try body finally l.release()
-        } finally ch.close()
-      } else withMaintenanceLockV2(lockFile)(body)
-    }
-  }
-
-  /** The r16 acquisition: fileKey-verified, registry-tracked (see the
-    * block comment inside). Callers come through
-    * [[withMaintenanceLock]], already holding the per-path JVM monitor. */
-  private def withMaintenanceLockV2[T](lockFile: java.io.File)(body: => T): T = {
-    {
       val canonLock = monitorKey(lockFile.getPath)
       // Unlink-under-lock closure (r15 ADVICE, medium): between our
       // channel-open and lock() — a window that includes the whole

@@ -27,9 +27,7 @@ object AtRestChaos {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // the READY line names the lock protocol in effect, so a spec that
-    // MEANT to spawn an old-protocol peer can assert it actually got one
-    println(s"CHAOS_READY legacy=${AtRest.legacyLockProtocol}")
+    println("CHAOS_READY")
     System.out.flush()
     try {
       mode match {

@@ -35,10 +35,10 @@ object TpchDeep {
   /** Q7-style volume shipping between two nations (either direction),
     * grouped by supplier/customer nation and ship year.
     *
-    * Plan note (100 TB): the OR-of-conjunctions nation-pair predicate is
-    * not derivable by Catalyst into per-dim IN-lists, so we derive it by
-    * hand — `n_name IN (pair)` is applied to BOTH nation dims before any
-    * fact join. The supplier side prunes lineitem map-side via a
+    * Plan note (100 TB): Catalyst alone does not derive per-dim IN-lists
+    * from the OR-of-conjunctions nation-pair predicate;
+    * [[graft.plans.DeriveInFilters]] does, and pushes `n_name IN (pair)`
+    * to BOTH nation scans before any fact join. The supplier side prunes lineitem map-side via a
     * broadcast join (2/25 of rows survive); the customer side prunes
     * orders before the orderkey shuffle. Only ~8% of each fact table
     * reaches the big lineitem⋈orders join, versus round 1's plan that
@@ -46,10 +46,9 @@ object TpchDeep {
     * the suite at 5.5 s). The final filter keeps only cross-nation
     * pairs, as in the original predicate. */
   def q7VolumeShipping(s: SparkSession, d: String): DataFrame = {
-    val pair = Seq("NATION_1", "NATION_2")
-    val n1 = Tables.nation(s, d).filter(col("n_name").isin(pair: _*))
+    val n1 = Tables.nation(s, d)
       .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-    val n2 = Tables.nation(s, d).filter(col("n_name").isin(pair: _*))
+    val n2 = Tables.nation(s, d)
       .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
     val supp = broadcast(Tables.supplier(s, d)
       .join(broadcast(n1), col("s_nationkey") === col("s_nk"))

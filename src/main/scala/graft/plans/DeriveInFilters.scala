@@ -28,8 +28,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * would be rewritten to EqualTo by OptimizeIn and re-derived forever).
   *
   * Runs in every session [[graft.Tables.configure]] builds (injected by
-  * [[graft.GraftExtensions]]); the hand-tuned q7 keeps its explicit
-  * pruning so it is optimal on a session without the extension too.
+  * [[graft.GraftExtensions]]), so q7 states only the disjunction and
+  * relies on this rule for its nation-scan pruning (PlanShapeSpec).
   */
 object DeriveInFilters extends Rule[LogicalPlan] {
 

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming twin of the batch sequential A/B monitor
   * ([[graft.operators.EventWindows.qAbSequential]]): purchase values
@@ -17,7 +16,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * batch or observed live, and AbStreamSpec proves row equality against
   * the batch query on the real corpus fed out of order.
   *
-  * Out-of-order correctness follows the [[CusumStream]] contract: a
+  * Out-of-order correctness follows the [[EventTimeBuffer]] contract: a
   * day folds into the cumulative moments only once the watermark passes
   * its END, so every late-but-in-horizon purchase still lands in its
   * day; the z computation repeats the batch query's exact double dag on
@@ -40,6 +39,7 @@ object AbStream {
       nbD: Long, sbD: Long, qbD: Long)
   private[graft] case class AbState(na: Long, sa: Long, qa: Long,
       nb: Long, sb: Long, qb: Long, pending: Seq[Pend], timerTs: Long)
+      extends EventTimeBuffer.Armed
 
   private val DayMs = 86400000L
 
@@ -51,12 +51,10 @@ object AbStream {
   private[graft] def cents(v: Double): Long =
     BigDecimal(v * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
-  class AbProcessor extends StatefulProcessor[String, Ev, DayZ] {
+  class AbProcessor extends EventTimeBuffer[String, Ev, DayZ, AbState]("ab",
+      AbState(0L, 0L, 0L, 0L, 0L, 0L, Nil, 0L)) {
 
-    @transient private var st: ValueState[AbState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AbState]("ab", Encoders.product[AbState], TTLConfig.NONE)
+    override protected def stateEncoder: Encoder[AbState] = Encoders.product[AbState]
 
     /** The batch query's z dag, verbatim: Welch variance terms from the
       * exact cumulative integer moments, one rounded division. */
@@ -76,7 +74,8 @@ object AbStream {
       (meanDiff, z, z.map(v => math.abs(v) > 2.797))
     }
 
-    private def finalizeBelow(merged: AbState, wm: Long): Iterator[DayZ] = {
+    override protected def finalizeBelow(key: String, merged: AbState,
+        wm: Long): (Iterator[DayZ], AbState) = {
       val (done, open) = merged.pending.partition(p => (p.day + 1) * DayMs <= wm)
       val out = Seq.newBuilder[DayZ]
       var (na, sa, qa, nb, sb, qb) =
@@ -88,17 +87,10 @@ object AbStream {
         out += DayZ(p.day, na, nb, md, z, sig)
       }
       val newTimer = if (open.nonEmpty) (open.map(_.day).min + 1) * DayMs else 0L
-      if (newTimer != merged.timerTs) {
-        if (merged.timerTs > wm) getHandle.deleteTimer(merged.timerTs)
-        if (newTimer > 0L) getHandle.registerTimer(newTimer)
-      }
-      st.update(AbState(na, sa, qa, nb, sb, qb, open, newTimer))
-      out.result().iterator
+      (out.result().iterator, AbState(na, sa, qa, nb, sb, qb, open, newTimer))
     }
 
-    override def handleInputRows(key: String, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[DayZ] = {
-      val prev = if (st.exists()) st.get() else AbState(0L, 0L, 0L, 0L, 0L, 0L, Nil, 0L)
+    override protected def buffer(prev: AbState, rows: Iterator[Ev]): AbState = {
       val add = rows.foldLeft(Map.empty[Long, Pend]) { (m, e) =>
         val d = math.floorDiv(e.ts.getTime, DayMs)
         val c = cents(e.value)
@@ -115,13 +107,7 @@ object AbStream {
               x.nbD + y.nbD, x.sbD + y.sbD, x.qbD + y.qbD)
           }
         }.toSeq
-      finalizeBelow(prev.copy(pending = mergedPending), timers.getCurrentWatermarkInMs())
-    }
-
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[DayZ] = {
-      if (!st.exists()) return Iterator.empty
-      finalizeBelow(st.get(), timers.getCurrentWatermarkInMs())
+      prev.copy(pending = mergedPending)
     }
   }
 

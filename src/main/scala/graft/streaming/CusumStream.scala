@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming twin of the batch CUSUM control chart
   * ([[graft.operators.EventWindows.qCusum]]): per event type, daily
@@ -20,15 +19,12 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * IDENTICAL — CusumStreamSpec proves row equality against qCusum on
   * the real corpus fed through a MemoryStream out of order.
   *
-  * Out-of-order correctness: a day's count is only folded into the
-  * recurrence once the watermark passes the END of that day — any
-  * still-arriving event for it would be behind the watermark and is
-  * dropped by the runtime (the same reprocessing horizon as the other
-  * stream ops). Days with zero events don't exist in the batch
+  * Out-of-order correctness ([[EventTimeBuffer]] contract): a day's
+  * count is only folded into the recurrence once the watermark passes
+  * the END of that day. Days with zero events don't exist in the batch
   * grouping either, so the fold skips them identically. State per type
-  * is the open per-day count map plus the O(1) (S⁺, S⁻) cursor; an
-  * event-time timer at the earliest open day boundary flushes quiet
-  * types as the watermark advances.
+  * is the open per-day count map plus the O(1) (S⁺, S⁻) cursor; the
+  * timer sits at the earliest open day boundary.
   *
   * Scale shape: ONE shuffle on event_type into the state store
   * (RocksDB provider at cluster scale); per-day partial counts could
@@ -44,22 +40,20 @@ object CusumStream {
 
   private[graft] case class PendDay(day: Long, n: Long)
   private[graft] case class CusumState(sp: Long, sn: Long,
-      pending: Seq[PendDay], timerTs: Long)
+      pending: Seq[PendDay], timerTs: Long) extends EventTimeBuffer.Armed
 
   private val DayMs = 86400000L
 
   class CusumProcessor(muPpmByType: Map[String, Long])
-      extends StatefulProcessor[String, Ev, DayStat] {
+      extends EventTimeBuffer[String, Ev, DayStat, CusumState]("cusum",
+        CusumState(0L, 0L, Nil, 0L)) {
 
-    @transient private var st: ValueState[CusumState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CusumState]("cusum",
-        Encoders.product[CusumState], TTLConfig.NONE)
+    override protected def stateEncoder: Encoder[CusumState] = Encoders.product[CusumState]
 
     /** Fold every pending day whose END the watermark has passed, in
       * day order, through the CUSUM recurrence. */
-    private def finalizeBelow(tp: String, merged: CusumState, wm: Long): Iterator[DayStat] = {
+    override protected def finalizeBelow(tp: String, merged: CusumState,
+        wm: Long): (Iterator[DayStat], CusumState) = {
       val mu = muPpmByType.getOrElse(tp, 0L)
       val (done, open) = merged.pending.partition(p => (p.day + 1) * DayMs <= wm)
       val out = Seq.newBuilder[DayStat]
@@ -70,30 +64,16 @@ object CusumStream {
         out += DayStat(tp, p.day, p.n, sp, sn, sp > 3 * mu || sn > 3 * mu)
       }
       val newTimer = if (open.nonEmpty) (open.map(_.day).min + 1) * DayMs else 0L
-      if (newTimer != merged.timerTs) {
-        if (merged.timerTs > wm) getHandle.deleteTimer(merged.timerTs)
-        if (newTimer > 0L) getHandle.registerTimer(newTimer)
-      }
-      st.update(CusumState(sp, sn, open, newTimer))
-      out.result().iterator
+      (out.result().iterator, CusumState(sp, sn, open, newTimer))
     }
 
-    override def handleInputRows(tp: String, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[DayStat] = {
-      val prev = if (st.exists()) st.get() else CusumState(0L, 0L, Nil, 0L)
+    override protected def buffer(prev: CusumState, rows: Iterator[Ev]): CusumState = {
       val add = rows.foldLeft(Map.empty[Long, Long]) { (m, e) =>
         val d = math.floorDiv(e.ts.getTime, DayMs)
         m.updated(d, m.getOrElse(d, 0L) + 1L)
       }
-      val mergedPending = (prev.pending.map(p => p.day -> p.n).toMap.toSeq ++ add.toSeq)
-        .groupBy(_._1).map { case (d, xs) => PendDay(d, xs.map(_._2).sum) }.toSeq
-      finalizeBelow(tp, prev.copy(pending = mergedPending), timers.getCurrentWatermarkInMs())
-    }
-
-    override def handleExpiredTimer(tp: String, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[DayStat] = {
-      if (!st.exists()) return Iterator.empty
-      finalizeBelow(tp, st.get(), timers.getCurrentWatermarkInMs())
+      prev.copy(pending = (prev.pending.map(p => p.day -> p.n).toMap.toSeq ++ add.toSeq)
+        .groupBy(_._1).map { case (d, xs) => PendDay(d, xs.map(_._2).sum) }.toSeq)
     }
   }
 

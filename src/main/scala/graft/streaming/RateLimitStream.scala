@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+
+import EventTimeBuffer.micros
 
 /** Streaming twin of the batch gateway rate limiter
   * ([[graft.operators.Gateway.qRateLimit]], G6): per-user trailing-1s call
@@ -15,21 +16,19 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * Out-of-order correctness: a call at time t is counted against the
   * trailing window [t−1s, t], so an EARLIER call arriving late can raise
   * an already-seen call's count past the limit. A decision is therefore
-  * not taken at arrival but FINALIZED at the watermark: once the
-  * watermark passes t, nothing that could still arrive (all later than
-  * the watermark) can land in [t−1s, t], and the count is exact — the
-  * same deferred-finalization contract the batch window computes in one
-  * pass. Calls are finalized strictly below the watermark and buffered
+  * not taken at arrival but FINALIZED at the watermark
+  * ([[EventTimeBuffer]] contract): once the watermark passes t, nothing
+  * that could still arrive can land in [t−1s, t], and the count is
+  * exact. Calls are finalized strictly below the watermark and buffered
   * until 1s below it (a later call's window may still reach them), so
-  * state per user is the calls of the last watermark second plus an O(1)
-  * finalized aggregate — bounded by per-user RATE, not history.
+  * state per user is the calls of the last watermark second plus an
+  * O(1) finalized aggregate — bounded by per-user RATE, not history.
   *
   * Scale shape: one shuffle on user_id into the state store (RocksDB
-  * provider at cluster scale, same contract as [[CorrelatorV2]]); an
-  * event-time timer at the newest buffered call guarantees finalization
-  * fires for quiet users as the watermark advances, without waiting for
-  * their next call. Emission is change-driven, so the output stream is
-  * bounded by finalization progress, not call volume. All three audit
+  * provider at cluster scale, same contract as [[CorrelatorV2]]); the
+  * timer sits just above the newest buffered call. Emission is
+  * change-driven, so the output stream is bounded by finalization
+  * progress, not call volume. All three audit
   * columns are monotone non-decreasing across a user's snapshots (events
   * only accumulate), so `max` per column over snapshots IS the final
   * answer — the property RateLimitStreamSpec aggregates on and proves
@@ -42,44 +41,36 @@ object RateLimitStream {
   /** Per-user audit snapshot over FINALIZED calls (exact counts). */
   case class LimitStats(user_id: Long, n_events: Long, max_calls_1s: Long, n_denied_1s: Long)
 
-  // private[graft] for the encoder-codegen reason documented on
-  // FunnelStream.FunnelState: private bytecode forces interpreted state
-  // (de)serialization on every access. `pending` holds calls not yet
-  // finalized; `band` retains already-finalized calls of the trailing
-  // watermark second, because a later call's window may still count them
-  // (the split is what keeps finalization exactly-once). Call times are
-  // kept in MICROSECONDS — the batch twin's window is
+  // `pending` holds calls not yet finalized; `band` retains
+  // already-finalized calls of the trailing watermark second, because a
+  // later call's window may still count them (the split is what keeps
+  // finalization exactly-once). Call times are kept in MICROSECONDS — the batch twin's window is
   // `unix_micros RANGE BETWEEN -1000000 AND 0`, and a millisecond
   // truncation would diverge from it exactly at the window boundary for
-  // sub-millisecond timestamps. `timerTs` is the armed event-time timer
-  // in ms, the runtime's timer domain (0 = none), tracked to re-arm
-  // cleanly.
+  // sub-millisecond timestamps.
   private[graft] case class LimitState(
       band: Seq[Long], pending: Seq[Long], timerTs: Long,
-      nEvents: Long, maxC: Long, nDenied: Long)
+      nEvents: Long, maxC: Long, nDenied: Long) extends EventTimeBuffer.Armed
 
-  /** Microseconds since epoch, full sub-ms precision (getTime alone
-    * truncates to ms; the sub-second field carries the rest). */
-  private def micros(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+  // "_v2": the persisted time domain changed ms → µs (batch-parity
+  // fix); without a state-name bump a query resumed from an OLD
+  // checkpoint would silently reinterpret ms values as µs (1000×
+  // too small) and finalize everything immediately with wrong
+  // window counts. The renamed handle makes a resume start clean.
+  class LimitProcessor(limit: Int)
+      extends EventTimeBuffer[Long, ApiCall, LimitStats, LimitState]("ratelimit_v2",
+        LimitState(Nil, Nil, 0L, 0L, 0L, 0L)) {
 
-  class LimitProcessor(limit: Int) extends StatefulProcessor[Long, ApiCall, LimitStats] {
+    override protected def stateEncoder: Encoder[LimitState] = Encoders.product[LimitState]
 
-    @transient private var st: ValueState[LimitState] = _
-
-    // "_v2": the persisted time domain changed ms → µs (batch-parity
-    // fix); without a state-name bump a query resumed from an OLD
-    // checkpoint would silently reinterpret ms values as µs (1000×
-    // too small) and finalize everything immediately with wrong
-    // window counts. The renamed handle makes a resume start clean.
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[LimitState]("ratelimit_v2",
-        Encoders.product[LimitState], TTLConfig.NONE)
+    override protected def buffer(prev: LimitState, rows: Iterator[ApiCall]): LimitState =
+      prev.copy(pending = (prev.pending ++ rows.map(r => micros(r.ts))).sorted)
 
     /** Finalize every pending call strictly below the watermark, prune
-      * the retained band to the trailing second, re-arm the timer, and
-      * emit a snapshot if the finalized aggregate advanced. */
-    private def finalizeBelow(uid: Long, merged: LimitState, wmMs: Long): Iterator[LimitStats] = {
+      * the retained band to the trailing second, and emit a snapshot if
+      * the finalized aggregate advanced. */
+    override protected def finalizeBelow(uid: Long, merged: LimitState,
+        wmMs: Long): (Iterator[LimitStats], LimitState) = {
       val wm = wmMs * 1000L // state domain is µs; the runtime's watermark is ms
       val (done, open) = merged.pending.partition(_ < wm)
       val all = (merged.band ++ merged.pending).sorted
@@ -97,29 +88,9 @@ object RateLimitStream {
       // (< wm µs) — once wmMs exceeds the call's ms, wm µs exceeds the
       // call's µs, so nothing can stay open forever
       val newTimer = if (open.nonEmpty) Math.floorDiv(open.max, 1000L) + 1L else 0L
-      if (newTimer != merged.timerTs) {
-        // only delete an armed timer that hasn't fired yet (a fired one
-        // no longer exists — it IS merged.timerTs <= wmMs); timers live
-        // in the runtime's ms domain
-        if (merged.timerTs > wmMs) getHandle.deleteTimer(merged.timerTs)
-        if (newTimer > 0L) getHandle.registerTimer(newTimer)
-      }
-      st.update(LimitState(band, open, newTimer, n, maxC, denied))
-      if (n != merged.nEvents) Iterator.single(LimitStats(uid, n, maxC, denied))
-      else Iterator.empty
-    }
-
-    override def handleInputRows(uid: Long, rows: Iterator[ApiCall],
-        timers: TimerValues): Iterator[LimitStats] = {
-      val prev = if (st.exists()) st.get() else LimitState(Nil, Nil, 0L, 0L, 0L, 0L)
-      val merged = prev.copy(pending = (prev.pending ++ rows.map(r => micros(r.ts))).sorted)
-      finalizeBelow(uid, merged, timers.getCurrentWatermarkInMs())
-    }
-
-    override def handleExpiredTimer(uid: Long, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[LimitStats] = {
-      if (!st.exists()) return Iterator.empty
-      finalizeBelow(uid, st.get(), timers.getCurrentWatermarkInMs())
+      val out = if (n != merged.nEvents) Iterator.single(LimitStats(uid, n, maxC, denied))
+        else Iterator.empty
+      (out, LimitState(band, open, newTimer, n, maxC, denied))
     }
   }
 

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming twin of the batch sessionizer
   * ([[graft.operators.EventWindows.qSessionize]]): 30-minute-gap
@@ -15,18 +14,18 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * a late-arriving earlier event can (a) extend a session backward-in-
   * arrival-order, or (b) BRIDGE two runs of events that a naive
   * arrival-order sessionizer would have split. Events therefore buffer
-  * per user until the watermark passes them, then finalize in (ts,
-  * event_id) order against the open session; the open session itself
-  * closes only when the watermark passes `last_event + gap` — at that
-  * point no admissible future event (all ≥ watermark) can be within the
-  * gap, so the emission is final. The gap compares FLOORED epoch
+  * per user until the watermark passes them ([[EventTimeBuffer]]
+  * contract), then finalize in (ts, event_id) order against the open
+  * session; the open session itself closes only when the watermark
+  * passes `last_event + gap` — at that point no admissible future event
+  * (all ≥ watermark) can be within the gap, so the emission is final. The gap compares FLOORED epoch
   * seconds, bit-matching the batch query's `cast(ts as long)`.
   *
   * Scale shape: one shuffle on user_id into the state store (RocksDB
   * provider at cluster scale); state per user is the open buffer
   * (bounded by watermark delay × user rate) plus the O(1) open-session
-  * accumulator; an event-time timer at min(next finalization, session
-  * close) lets quiet users close sessions without new input.
+  * accumulator; the timer sits at min(next finalization, session
+  * close), so quiet users close sessions without new input.
   * SessionStreamSpec proves multiset equality with the batch window
   * form on out-of-order and session-bridging feeds.
   */
@@ -39,21 +38,17 @@ object SessionStream {
   case class Session(user_id: Long, session_idx: Long, n_events: Long,
       start_s: Long, end_s: Long, duration_s: Long)
 
-  // private[graft] for the encoder-codegen reason documented on
-  // FunnelStream.FunnelState. Times are epoch MILLIS; the gap rule
-  // floors to seconds at comparison time to match the batch query.
+  // Times are epoch MILLIS; the gap rule floors to seconds at
+  // comparison time to match the batch query.
   private[graft] case class PendEv(ts: Long, id: Long)
   private[graft] case class SessState(
       hasOpen: Boolean, idx: Long, nEvents: Long, startTs: Long, lastTs: Long,
-      pending: Seq[PendEv], timerTs: Long)
+      pending: Seq[PendEv], timerTs: Long) extends EventTimeBuffer.Armed
 
-  class SessProcessor extends StatefulProcessor[Long, Ev, Session] {
+  class SessProcessor extends EventTimeBuffer[Long, Ev, Session, SessState]("sessions",
+      SessState(hasOpen = false, 0L, 0L, 0L, 0L, Nil, 0L)) {
 
-    @transient private var st: ValueState[SessState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessState]("sessions",
-        Encoders.product[SessState], TTLConfig.NONE)
+    override protected def stateEncoder: Encoder[SessState] = Encoders.product[SessState]
 
     private def secs(ms: Long): Long = Math.floorDiv(ms, 1000L)
 
@@ -61,10 +56,14 @@ object SessionStream {
       Session(uid, s.idx, s.nEvents, secs(s.startTs), secs(s.lastTs),
         secs(s.lastTs) - secs(s.startTs))
 
+    override protected def buffer(prev: SessState, rows: Iterator[Ev]): SessState =
+      prev.copy(pending = prev.pending ++ rows.map(e => PendEv(e.ts.getTime, e.event_id)))
+
     /** Finalize pending events strictly below the watermark in (ts, id)
       * order, splitting sessions on the floored-seconds gap; then close
       * the open session if the watermark has passed its gap horizon. */
-    private def finalizeBelow(uid: Long, merged: SessState, wm: Long): Iterator[Session] = {
+    override protected def finalizeBelow(uid: Long, merged: SessState,
+        wm: Long): (Iterator[Session], SessState) = {
       val (done, open) = merged.pending.partition(_.ts < wm)
       val out = Seq.newBuilder[Session]
       var cur = merged
@@ -93,27 +92,7 @@ object SessionStream {
         if (open.nonEmpty) Some(open.map(_.ts).max + 1L) else None,
         if (cur.hasOpen) Some((secs(cur.lastTs) + GapSeconds + 1L) * 1000L) else None).flatten
       val newTimer = if (cands.nonEmpty) cands.min else 0L
-      if (newTimer != merged.timerTs) {
-        if (merged.timerTs > wm) getHandle.deleteTimer(merged.timerTs)
-        if (newTimer > 0L) getHandle.registerTimer(newTimer)
-      }
-      st.update(cur.copy(pending = open, timerTs = newTimer))
-      out.result().iterator
-    }
-
-    override def handleInputRows(uid: Long, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[Session] = {
-      val prev = if (st.exists()) st.get()
-        else SessState(hasOpen = false, 0L, 0L, 0L, 0L, Nil, 0L)
-      val merged = prev.copy(pending =
-        prev.pending ++ rows.map(e => PendEv(e.ts.getTime, e.event_id)))
-      finalizeBelow(uid, merged, timers.getCurrentWatermarkInMs())
-    }
-
-    override def handleExpiredTimer(uid: Long, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[Session] = {
-      if (!st.exists()) return Iterator.empty
-      finalizeBelow(uid, st.get(), timers.getCurrentWatermarkInMs())
+      (out.result().iterator, cur.copy(pending = open, timerTs = newTimer))
     }
   }
 

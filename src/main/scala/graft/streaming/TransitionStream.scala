@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+
+import EventTimeBuffer.micros
 
 /** Streaming twin of the batch transition matrix
   * ([[graft.operators.EventWindows.qEventTransitions]]): consecutive
@@ -14,8 +15,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * Out-of-order correctness: "consecutive" is defined by event time, so
   * an earlier event arriving late would splice itself INTO an already
   * emitted pair. A pair is therefore only emitted once the watermark
-  * passes its later event — nothing that can still arrive (all later
-  * than the watermark) can land between two finalized events. Events
+  * passes its later event ([[EventTimeBuffer]] contract) — nothing that
+  * can still arrive can land between two finalized events. Events
   * buffer per user until the watermark passes them, then finalize in
   * (ts, event_id) order against the retained last-finalized event — the
   * exact pairing the batch lead() window computes. State per user is the
@@ -23,9 +24,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * O(1) last-finalized event.
   *
   * Scale shape: one shuffle on user_id into the state store (RocksDB
-  * provider at cluster scale); an event-time timer at the newest open
-  * event finalizes quiet users as the watermark advances without new
-  * input. Each transition is emitted exactly once (finalization is
+  * provider at cluster scale); the timer sits just above the newest
+  * open event. Each transition is emitted exactly once (finalization is
   * strict-below-watermark and the last-event cursor advances with it) —
   * TransitionStreamSpec proves multiset equality with the batch pairing
   * on randomized out-of-order feeds.
@@ -36,40 +36,36 @@ object TransitionStream {
 
   case class Transition(user_id: Long, from_type: String, to_type: String, to_event_id: Long)
 
-  // private[graft] for the encoder-codegen reason documented on
-  // FunnelStream.FunnelState. `hasLast` flags a live cursor (encoders
-  // round-trip None poorly across codegen; a flag + fields is flat and
-  // fast). `pending` holds events the watermark has not passed. Event
-  // times are kept in MICROSECONDS: the batch lead() orders by the
-  // full-precision timestamp, so a millisecond truncation would
-  // tie-break same-ms/different-µs neighbors by event_id where the
-  // batch twin orders them by time — an inverted (from, to) pair.
+  // `hasLast` flags a live cursor (encoders round-trip None poorly
+  // across codegen; a flag + fields is flat and fast). `pending` holds
+  // events the watermark has not passed. Event times are kept in
+  // MICROSECONDS: the batch lead() orders by the full-precision
+  // timestamp, so a millisecond truncation would tie-break
+  // same-ms/different-µs neighbors by event_id where the batch twin
+  // orders them by time — an inverted (from, to) pair.
   private[graft] case class PendEv(ts: Long, id: Long, tp: String)
-
-  /** Microseconds since epoch, full sub-ms precision (getTime alone
-    * truncates to ms; the sub-second field carries the rest). */
-  private def micros(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
   private[graft] case class TransState(
       hasLast: Boolean, lastTs: Long, lastId: Long, lastType: String,
-      pending: Seq[PendEv], timerTs: Long)
+      pending: Seq[PendEv], timerTs: Long) extends EventTimeBuffer.Armed
 
-  class TransProcessor extends StatefulProcessor[Long, Ev, Transition] {
+  // "_v2": PendEv/TransState's persisted time domain changed ms → µs
+  // (batch-parity fix); the state-name bump makes a resume from an
+  // old-domain checkpoint start clean instead of silently
+  // reinterpreting ms values as µs (same contract as
+  // RateLimitStream's "ratelimit_v2").
+  class TransProcessor extends EventTimeBuffer[Long, Ev, Transition, TransState](
+      "transitions_v2", TransState(hasLast = false, 0L, 0L, "", Nil, 0L)) {
 
-    @transient private var st: ValueState[TransState] = _
+    override protected def stateEncoder: Encoder[TransState] = Encoders.product[TransState]
 
-    // "_v2": PendEv/TransState's persisted time domain changed ms → µs
-    // (batch-parity fix); the state-name bump makes a resume from an
-    // old-domain checkpoint start clean instead of silently
-    // reinterpreting ms values as µs (same contract as
-    // RateLimitStream's "ratelimit_v2").
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TransState]("transitions_v2",
-        Encoders.product[TransState], TTLConfig.NONE)
+    override protected def buffer(prev: TransState, rows: Iterator[Ev]): TransState =
+      prev.copy(pending =
+        prev.pending ++ rows.map(e => PendEv(micros(e.ts), e.event_id, e.event_type)))
 
     /** Finalize every pending event strictly below the watermark in
       * (ts, id) order, pairing each against the advancing cursor. */
-    private def finalizeBelow(uid: Long, merged: TransState, wmMs: Long): Iterator[Transition] = {
+    override protected def finalizeBelow(uid: Long, merged: TransState,
+        wmMs: Long): (Iterator[Transition], TransState) = {
       val wm = wmMs * 1000L // state domain is µs; the runtime's watermark is ms
       val (done, open) = merged.pending.partition(_.ts < wm)
       val out = Seq.newBuilder[Transition]
@@ -84,26 +80,7 @@ object TransitionStream {
       // the newest open event
       val newTimer =
         if (open.nonEmpty) Math.floorDiv(open.map(_.ts).max, 1000L) + 1L else 0L
-      if (newTimer != merged.timerTs) {
-        if (merged.timerTs > wmMs) getHandle.deleteTimer(merged.timerTs)
-        if (newTimer > 0L) getHandle.registerTimer(newTimer)
-      }
-      st.update(TransState(hasLast, lTs, lId, lTp, open, newTimer))
-      out.result().iterator
-    }
-
-    override def handleInputRows(uid: Long, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[Transition] = {
-      val prev = if (st.exists()) st.get() else TransState(hasLast = false, 0L, 0L, "", Nil, 0L)
-      val merged = prev.copy(pending =
-        prev.pending ++ rows.map(e => PendEv(micros(e.ts), e.event_id, e.event_type)))
-      finalizeBelow(uid, merged, timers.getCurrentWatermarkInMs())
-    }
-
-    override def handleExpiredTimer(uid: Long, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[Transition] = {
-      if (!st.exists()) return Iterator.empty
-      finalizeBelow(uid, st.get(), timers.getCurrentWatermarkInMs())
+      (out.result().iterator, TransState(hasLast, lTs, lId, lTp, open, newTimer))
     }
   }
 

@@ -205,71 +205,6 @@ class CrossProcessAtRestSpec extends SparkSpec {
     info(s"30 ticks + 10 local compacts + 25 worker folds interleaved; $retries transient read retries")
   }
 
-  test("MIXED-MODE: old-protocol (pre-r16) locker vs new registry/stat locker — no lost takedown, reads exact") {
-    // Production rollouts are never atomic: for one deploy window every
-    // index tree has maintenance lockers of BOTH lock generations. The
-    // worker JVM runs the verbatim pre-r16 acquisition (plain
-    // open+lock: no fileKey verify, no heldLockPaths registry —
-    // `-Dgraft.lock.legacy=true`); this JVM runs the r16 protocol. The
-    // kernel FileLock is the shared substrate, so mutual exclusion of
-    // whole rewrite cycles must hold across the generation gap; the
-    // fileKey/registry layers only defend their OWN acquisition against
-    // unlink races and must not confuse an old peer.
-    val idx = s"$baseDir/idx_mixed"
-    val tomb = s"$baseDir/tomb_mixed"
-    val n = 5000
-    seedIndex(idx, n)
-
-    def serving(): DataFrame = {
-      val ticks = AtRest.committedTickDirs(tomb)
-      val raw = spark.read.parquet(idx)
-      if (ticks.isEmpty) raw
-      else raw.join(
-        broadcast(spark.read.parquet(ticks.map(_.getAbsolutePath): _*)
-          .select("doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
-    }
-
-    val (p, log) = spawnWorker("mixed.log", Seq("-Dgraft.lock.legacy=true"),
-      "fold", idx, tomb, "20")
-    assert(workerLog(log).contains("CHAOS_READY legacy=true"),
-      "worker did not come up on the LEGACY lock protocol")
-    assert(!AtRest.legacyLockProtocol, "test JVM must run the NEW protocol")
-
-    val appended = scala.collection.mutable.Set.empty[Long]
-    var retries = 0
-    (1 to 24).foreach { k =>
-      val ids = Seq(5L * k, 5L * k + 2)
-      import spark.implicits._
-      ids.toDF("doc_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$tomb/batch_id=$k")
-      appended ++= ids
-      if (k % 3 == 0) AtRest.compact(spark, idx, Seq("doc_id"), numFiles = 2)
-      val want = expectedSum(n, appended.toSet)
-      val (cnt, sum, att) = readChecksum(() => serving())
-      retries += att
-      assert(cnt == n.toLong - appended.size && sum == want,
-        s"serving view wrong after tick $k under mixed-protocol chaos: ($cnt, $sum)")
-    }
-    awaitOk(p, log)
-
-    var guard = 0
-    while (AtRest.committedTickDirs(tomb).nonEmpty && guard < 20) {
-      AtRest.applyTombstones(spark, idx, tomb, Seq("doc_id"))
-      guard += 1
-    }
-    assert(AtRest.committedTickDirs(tomb).isEmpty, "tombstone tree did not drain")
-    assertNoResidue(idx)
-    val want = expectedSum(n, appended.toSet)
-    val (cnt, sum, _) = readChecksum(() => spark.read.parquet(idx))
-    assert(cnt == n.toLong - appended.size && sum == want,
-      s"PHYSICAL index after mixed-protocol drain: ($cnt, $sum) — lost takedown or resurrected row")
-    val leaked = spark.read.parquet(idx)
-      .filter(col("doc_id").isin(appended.toSeq.map(Long.box): _*)).count()
-    assert(leaked == 0, s"$leaked purged doc_ids still physically present")
-    info(s"24 ticks + 8 new-protocol compacts vs 20 legacy-protocol folds; $retries transient read retries")
-  }
-
   /** Hard-kill (`Runtime.halt` via `-Dgraft.chaos.halt=<point>`) a
     * worker mid-fold and return once it is dead, asserting it died at
     * the injected point (exit 42, CHAOS_HALT in the log, no CHAOS_OK). */

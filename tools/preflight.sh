@@ -6,9 +6,9 @@
 #
 #   tools/preflight.sh            # compile + tests + sf0.001 Verify + oracle check
 #                                 # + the benchmark helpers' unit tests
-#   tools/preflight.sh --fast     # run only the harness, session-surface and
-#                                 # streaming-checkpoint specs instead of the
-#                                 # full ScalaTest suite
+#   tools/preflight.sh --fast     # run only the harness, session-surface,
+#                                 # streaming and cross-process at-rest specs
+#                                 # instead of the full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -37,11 +37,19 @@ if grep -rnE 'FileContextBasedCheckpointFileManager|FileSystemBasedCheckpointFil
   echo "checkpoint file manager or raw local file system outside CheckpointFiles.scala (listed above)" >&2
   exit 1
 fi
+# One event-time finalizer: the buffer-until-watermark processors arm
+# and delete timers only through EventTimeBuffer; CorrelatorV2 (a timer
+# per request) and TemporalJoin keep their own timer contracts.
+if grep -rnE 'registerTimer|deleteTimer' src/main/scala/graft/streaming \
+    | grep -vE '^src/main/scala/graft/streaming/(EventTimeBuffer|CorrelatorV2|TemporalJoin)\.scala:'; then
+  echo "event-time timer outside EventTimeBuffer/CorrelatorV2/TemporalJoin (listed above)" >&2
+  exit 1
+fi
 sbt -batch "compile; Test/compile" | tail -2
 if [[ "${1:-}" != "--fast" ]]; then
   sbt -batch test | tail -3
 else
-  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec graft.ExtensionsSpec graft.DuckDbDialectSpec graft.CheckpointFilesSpec graft.CorrelatorV2Spec graft.RateLimitStreamSpec" | tail -3
+  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec graft.ExtensionsSpec graft.DuckDbDialectSpec graft.CheckpointFilesSpec graft.CorrelatorV2Spec graft.RateLimitStreamSpec graft.AbStreamSpec graft.CusumStreamSpec graft.SessionStreamSpec graft.TransitionStreamSpec graft.CrossProcessAtRestSpec" | tail -3
 fi
 OUT=/tmp/preflight_verify
 rm -rf "$OUT"
