@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   * shared code [[Version]].
   *
   * Build invariant: a generation is written — and [[gcStale]] run —
-  * only when its fingerprint directory lacks `_SUCCESS` ([[buildOnce]]);
+  * only when its fingerprint directory is not [[isBuilt]] ([[buildOnce]]);
   * every other call serves the generation already on disk. The params
   * string is the content contract: two calls that resolve to the same
   * directory must be able to serve each other's bytes.
@@ -138,16 +138,15 @@ object AtRest {
     }
   }
 
-  /** A parquet write is complete iff Spark's _SUCCESS marker landed.
-    * (Also the crash-recovery read barrier: a maintenance swap that died
-    * between its two renames is healed before the check.) */
-  def isBuilt(dir: java.io.File): Boolean = {
-    restoreCrashedSwap(dir)
-    new java.io.File(dir, "_SUCCESS").isFile
-  }
+  /** The one "built" test, for generations and tick trees alike: the
+    * directory has a committed part ([[committedTickDirs]]) — for a
+    * generation, Spark's `_SUCCESS` marker at its root. Also the
+    * crash-recovery read barrier: a maintenance swap that died between
+    * its two renames is healed before the check. */
+  def isBuilt(dir: java.io.File): Boolean = committedTickDirs(dir.getPath).nonEmpty
 
-  /** The single build-if-absent primitive: when any of `dirs` lacks its
-    * `_SUCCESS`, run `write` (which must produce every one of them), then
+  /** The single build-if-absent primitive: when any of `dirs` is not
+    * [[isBuilt]], run `write` (which must build every one of them), then
     * [[gcStale]] each; otherwise do nothing. Double-checked under one
     * JVM monitor per directory (taken in canonical-path order, so
     * builders of overlapping directory sets cannot deadlock): concurrent
@@ -189,38 +188,102 @@ object AtRest {
     if (!wrotePartitions) df.write.mode("overwrite").parquet(dir)
   }
 
-  /** A streaming tick tree (`batch_id=<id>` subdirs) is readable iff at
-    * least one completed tick partition exists — or the tree was
-    * compacted (root `_SUCCESS` from the compaction rewrite). */
-  def isBuiltTree(dir: String): Boolean = {
-    val d = new java.io.File(dir)
-    restoreCrashedSwap(d)
-    d.isDirectory && (new java.io.File(d, "_SUCCESS").isFile ||
-      Option(d.listFiles()).exists(_.exists(f =>
-        f.isDirectory && new java.io.File(f, "_SUCCESS").isFile)))
+  /** TICK TREES. A streaming maintenance sink (graft.streaming.StreamOps)
+    * keeps its output as a tick tree: one Hive partition `batch_id=<id>`
+    * per foreachBatch id. Sinks, readers and folds go through the four
+    * parts of this contract, so they all agree on which ticks exist:
+    *
+    *  - Write ([[writeTick]]): one tick per id, in overwrite mode, under
+    *    `batch_id=<id>`. foreachBatch is at-least-once; a replayed batch
+    *    rewrites its own tick instead of appending a second copy (and a
+    *    crash mid-batch is healed by the same rewrite).
+    *  - Committed set ([[committedTicks]], [[committedTickDirs]]): tick
+    *    `k` is committed iff the root carries `_SUCCESS` (a tree that
+    *    [[compactTicks]] rewrote whole) or `batch_id=k` carries its own.
+    *    A torn tick (no marker) is invisible to every reader and fold,
+    *    and the fold that rewrites the tree drops it; its batch replays.
+    *    A swap that died between its renames is healed first.
+    *  - Relation ([[ticksRelation]], [[committedRelation]]): ticks read as
+    *    one relation with `batch_id` dropped. A tick that reads its own
+    *    tree excludes its own id, so a replay sees exactly the state its
+    *    first attempt saw.
+    *  - Fence ([[foldable]]): a fold never takes the newest committed
+    *    tick. Its checkpoint may not have committed, so it may still
+    *    replay, and the replay exclusion only works while its rows live
+    *    under their own id. A tick with a successor can no longer replay
+    *    (its checkpoint committed before the successor started).
+    *
+    * Folds must run between ticks, never concurrent with a tick write to
+    * the same tree (see [[compactTicks]]). */
+  private val Marker = "_SUCCESS"
+  private val TickCol = "batch_id"
+  private val TickPrefix = s"$TickCol="
+  private def marked(d: java.io.File): Boolean = new java.io.File(d, Marker).isFile
+  private def tickDir(dir: String, id: Long) = new java.io.File(dir, s"$TickPrefix$id")
+  private def tickDirs(d: java.io.File): Seq[(Long, java.io.File)] =
+    Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
+      .filter(f => f.getName.startsWith(TickPrefix) && f.isDirectory)
+      .map(f => (f.getName.stripPrefix(TickPrefix).toLong, f))
+      .sortBy(_._1)
+
+  /** Write `df` as tick `id` of the tree at `dir`, replacing any earlier
+    * attempt of the same id. */
+  def writeTick(df: org.apache.spark.sql.DataFrame, dir: String, id: Long,
+      partitionBy: String*): Unit = {
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+      .parquet(tickDir(dir, id).getPath)
   }
 
-  /** The COMMITTED portion of a tick tree, as concrete directories: the
-    * root itself when the tree was rewritten whole (root `_SUCCESS` —
-    * compactTicks' layout), otherwise every `batch_id=<id>` partition
-    * whose own `_SUCCESS` landed. This is the ONE definition of "what a
-    * tombstone/tick reader may see" — every consumer of a tree that is
-    * also MAINTAINED (read-then-delete) must read exactly this set, or
-    * the serving view and the maintenance pass diverge on a partition
-    * that never commits: the logical reader would apply it forever
-    * while the physical fold skips (and never clears) it. Scoping both
-    * to committed partitions also keeps a torn, crash-interrupted
-    * partition write from failing the read. */
-  private[graft] def committedTickDirs(dir: String): Seq[java.io.File] = {
+  /** (root committed, committed ticks ascending) — the one committed-set
+    * definition; a missing directory has none. */
+  private def commitState(dir: String): (Boolean, Seq[(Long, java.io.File)]) = {
     val d = new java.io.File(dir)
     restoreCrashedSwap(d)
-    if (!d.isDirectory) Nil
-    else if (new java.io.File(d, "_SUCCESS").isFile) Seq(d)
-    else Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id=") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .sortBy(_.getName)
+    val whole = marked(d)
+    (whole, tickDirs(d).filter { case (_, f) => whole || marked(f) })
   }
+
+  /** Ids of the committed ticks of `dir`, ascending. */
+  private[graft] def committedTicks(dir: String): Seq[Long] = commitState(dir)._2.map(_._1)
+
+  /** The committed portion of `dir` as concrete directories: the root
+    * itself when the root is committed, otherwise every committed tick.
+    * A consumer of a tree that is also maintained (read-then-delete)
+    * reads exactly this set, or the serving view and the maintenance
+    * pass diverge on a tick that never commits. */
+  private[graft] def committedTickDirs(dir: String): Seq[java.io.File] = {
+    val (whole, ticks) = commitState(dir)
+    if (whole) Seq(new java.io.File(dir)) else ticks.map(_._2)
+  }
+
+  /** The ticks `ids` (committed, non-empty) of `dir` as one relation,
+    * `batch_id` dropped. Each tick is named explicitly, so one deleted
+    * before the read fails it instead of silently vanishing. */
+  private[graft] def ticksRelation(s: SparkSession, dir: String,
+      ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+    s.read.option("basePath", dir).parquet(ids.map(tickDir(dir, _).getPath): _*)
+      .drop(TickCol)
+
+  /** Every committed tick of `dir` except `except` (the tick being
+    * written, on a replay) as one relation; None when there is none. */
+  private[graft] def committedRelation(s: SparkSession, dir: String,
+      except: Option[Long] = None): Option[org.apache.spark.sql.DataFrame] = {
+    val ids = committedTicks(dir).filterNot(except.contains)
+    if (ids.isEmpty) None else Some(ticksRelation(s, dir, ids))
+  }
+
+  /** The replay fence: of committed tick ids (ascending), those a fold
+    * may take — all but the newest. */
+  private[graft] def foldable(ids: Seq[Long]): Seq[Long] = ids.dropRight(1)
+
+  /** Delete every tick of `dir` with id ≤ `through`, committed or not —
+    * for a fold that absorbed them (a tick at or below a folded id has a
+    * successor, so it can no longer replay). */
+  private[graft] def dropTicks(dir: String, through: Long): Unit =
+    tickDirs(new java.io.File(dir)).foreach { case (id, f) =>
+      if (id <= through) deleteRecursively(f)
+    }
 
   /** Crash recovery for the maintenance swap: the two-rename sequence
     * (`dir → dir.compact-old`, then `dir.compact-tmp → dir`) is not
@@ -251,7 +314,7 @@ object AtRest {
     }
     if (!bak.exists()) return
     val tmp = new java.io.File(dir.getPath + ".compact-tmp")
-    if (new java.io.File(tmp, "_SUCCESS").isFile && tmp.renameTo(dir)) {
+    if (marked(tmp) && tmp.renameTo(dir)) {
       deleteRecursively(bak)
     } else if (bak.renameTo(dir) || dir.exists()) {
       // restored the backup — or a concurrent healer beat us to either
@@ -548,26 +611,18 @@ object AtRest {
       ()
     }
 
-  /** Compaction for the STREAMING tick trees (`batch_id=<id>` Hive
-    * partitions appended by pairIndexRefreshSink / annQuerySink /
-    * driftMonitorSink): folds every existing tick partition into ONE
-    * `batch_id=-1` history partition of `numFiles` key-sorted files,
-    * preserving the Hive layout so later ticks keep appending their own
-    * positive-id subdirectories and readers see one consistent
-    * partitioned relation throughout. Data columns are byte-identical
-    * before/after; only the batch_id provenance of compacted history
-    * collapses to -1 (AtRestSpec proves both).
-    *
-    * REPLAY FENCE: the HIGHEST positive batch_id is never folded — the
-    * refresh sinks' at-least-once idempotency excludes the in-flight
-    * batch from the standing index via `batch_id =!= id`, which only
-    * works while a possibly-uncommitted tick's rows still live under
-    * their own partition. Folding them into -1 between the tick's write
-    * and its checkpoint commit would make a replay re-derive them as
-    * duplicates — so compaction structurally cannot REPLAY-corrupt the
-    * newest tick it saw. The fenced tick folds on the NEXT maintenance
-    * pass, by which time its checkpoint committed (or its replay rewrote
-    * the same partition in place).
+  /** Compaction for the STREAMING tick trees (pairIndexRefreshSink,
+    * ivfDeltaSink, annQuerySink, driftMonitorSink): folds the committed
+    * ticks into ONE `batch_id=-1` history partition of `numFiles`
+    * key-sorted files, preserving the Hive layout so later ticks keep
+    * appending their own positive-id subdirectories and readers see one
+    * consistent partitioned relation throughout. Data columns are
+    * byte-identical before/after; only the batch_id provenance of
+    * compacted history collapses to -1 (AtRestSpec proves both). The
+    * newest committed tick is fenced (see the tick-tree contract above)
+    * and re-copied under its own id; it folds on the NEXT pass. A torn
+    * tick is not carried into the rewritten tree, whose root `_SUCCESS`
+    * would otherwise commit it.
     *
     * SCHEDULING CAVEAT — the fence addresses replay, NOT write
     * concurrency: run this between ticks, never concurrent with an
@@ -578,27 +633,21 @@ object AtRest {
     * the backup: lost data either way. */
   def compactTicks(s: SparkSession, dir: String, sortCols: Seq[String], numFiles: Int = 4): Unit = withMaintenanceLock(dir) {
     import org.apache.spark.sql.functions.{col, lit}
-    restoreCrashedSwap(new java.io.File(dir))
-    val old = new java.io.File(dir)
-    val tickIds = Option(old.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val positive = tickIds.filter(_ >= 0).sorted
-    val foldable = positive.dropRight(1) // fence: keep the newest tick
-    if (foldable.isEmpty) return
+    val (history, positive) = committedTicks(dir).partition(_ < 0)
+    val fold = foldable(positive)
+    if (fold.isEmpty) return
+    val newest = positive.last
     val tmp = dir + ".compact-tmp"
     // the rewrite is SELF-CONTAINED (folded history + the fenced tick
     // under its own id, re-copied): tmp alone is always a complete
     // index, so the only dangerous window is the two-rename swap —
     // which restoreCrashedSwap heals from either side
-    val all = s.read.parquet(dir).withColumn("batch_id", col("batch_id").cast("long"))
-    val hist = all.filter(col("batch_id").isin((foldable :+ -1L).map(Long.box): _*))
-      .drop("batch_id")
+    ticksRelation(s, dir, history ++ fold)
       .repartition(numFiles)
       .sortWithinPartitions(sortCols.map(col): _*)
-      .withColumn("batch_id", lit(-1L))
-    hist.unionByName(all.filter(col("batch_id") === positive.last))
-      .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
+      .withColumn(TickCol, lit(-1L))
+      .unionByName(ticksRelation(s, dir, Seq(newest)).withColumn(TickCol, lit(newest)))
+      .write.partitionBy(TickCol).mode("overwrite").parquet(tmp)
     swapInPlace(dir, tmp, "compactTicks") // rollback-safe: tmp was self-contained
     ()
   }
@@ -624,13 +673,12 @@ object AtRest {
   def applyTombstones(s: SparkSession, indexDir: String, tombDir: String,
       keyCols: Seq[String]): Unit = withMaintenanceLock(indexDir) {
     import org.apache.spark.sql.functions.{broadcast, col}
-    if (!isBuiltTree(tombDir)) return
-    restoreCrashedSwap(new java.io.File(indexDir))
     // the SAME committed-tick set the logical serving read applies
     // (Dedup.pairsAtRestServing) — reading a different set would leave
     // raw and serving permanently divergent on a never-committed tick
     val ticks = committedTickDirs(tombDir)
     if (ticks.isEmpty) return
+    restoreCrashedSwap(new java.io.File(indexDir))
     // In the whole-tree layout (root _SUCCESS — compactTicks' output)
     // committedTickDirs returns the root ITSELF; deleting that
     // recursively after the swap would also discard any batch_id= tick
@@ -647,10 +695,9 @@ object AtRest {
       .exists(_.getAbsolutePath == rootDir.getAbsolutePath)
     val (spent, marker) =
       if (wholeTree) {
-        val entries = Option(rootDir.listFiles()).map(_.toSeq).getOrElse(Nil)
-          .filter(f => (f.isDirectory && f.getName.startsWith("batch_id=")) ||
-            (f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")))
-        (entries, Some(new java.io.File(rootDir, "_SUCCESS")))
+        val files = Option(rootDir.listFiles()).map(_.toSeq).getOrElse(Nil)
+          .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        (tickDirs(rootDir).map(_._2) ++ files, Some(new java.io.File(rootDir, Marker)))
       } else (ticks, None)
     if (spent.isEmpty) return
     val t = s.read.parquet(spent.map(_.getAbsolutePath): _*)

@@ -106,15 +106,16 @@ object Tables {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val confs = inferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
-    try {
-      val files = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
-      val listing = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (files.hasNext) {
-        val f = files.next()
-        listing += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
-      }
-      Some(listing.sorted.mkString(confs + "|", "|", ""))
-    } catch { case _: java.io.FileNotFoundException => None }
+    // a listStatus walk, not listFiles: listFiles builds LocatedFileStatus,
+    // whose constructor reads each file's permission — on a local file
+    // system without libhadoop that forks `ls -ld` per file
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else Seq(s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+    }
+    try Some(walk(root).sorted.mkString(confs + "|", "|", ""))
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

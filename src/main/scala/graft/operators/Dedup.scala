@@ -261,12 +261,10 @@ object Dedup {
     // index-first would open a window — pre-purge index files paired
     // with a post-spend empty tick list — that transiently resurrects
     // purged pairs.
-    val ticks = graft.AtRest.committedTickDirs(tombDir)
+    val tombs = graft.AtRest.committedRelation(s, tombDir)
     val pairs = pairsAtRest(s, d)
-    if (ticks.isEmpty) pairs
-    else {
-      val t = s.read.parquet(ticks.map(_.getAbsolutePath): _*)
-        .select("doc_id").distinct()
+    tombs.fold(pairs) { ticks =>
+      val t = ticks.select("doc_id").distinct()
       pairs
         .join(broadcast(t.withColumnRenamed("doc_id", "a_id")), Seq("a_id"), "left_anti")
         .join(broadcast(t.withColumnRenamed("doc_id", "b_id")), Seq("b_id"), "left_anti")
@@ -1815,7 +1813,7 @@ object Dedup {
     // leaving most cores idle through its straggler tail; submitting
     // them from two driver threads lets the FIFO scheduler back-fill
     // one pipeline's tail with the other's tasks. Counts unchanged.
-    val (nPred, nTruth) = graft.awaitBoth(() => pred.count(), () => truth.count())
+    val Seq(nPred, nTruth) = graft.awaitAll(Seq(() => pred.count(), () => truth.count()))
     // the join below touches only pred/truth — release the big sset
     // cache NOW so it cannot crowd them out of storage memory
     sets.unpersist(blocking = true)

@@ -511,7 +511,7 @@ object Multimodal {
     // independent jobs, one pipeline's tail back-fills the other. The
     // shared cellsRel cache is fill-safe under concurrency (the block
     // manager serializes per-partition computation).
-    val (nPred, nTruth) = graft.awaitBoth(() => pred.count(), () => truth.count())
+    val Seq(nPred, nTruth) = graft.awaitAll(Seq(() => pred.count(), () => truth.count()))
     cellsRel.unpersist(blocking = true) // the join reads only pred/truth
     val nTp = pred.join(truth, Seq("a_id", "b_id")).count()
     pred.unpersist(blocking = false); truth.unpersist(blocking = false)

@@ -558,13 +558,10 @@ object Scale {
     val histDir = mvHistAtRest(s, d)
     val tickDir = AtRest.dir(s, d, "mv_lineitem_rollup_ticks", "lineitem",
       params = s"$MvParams;ticks>=$MvCutoff")
-    if (!AtRest.isBuiltTree(tickDir.getAbsolutePath)) synchronized {
-      if (!AtRest.isBuiltTree(tickDir.getAbsolutePath)) {
-        graft.streaming.StreamOps.mvDeltaTick(
-          Tables.lineitem(s, d).where(col("l_shipdate") >= MvCutoff),
-          0L, tickDir.getAbsolutePath)
-        if (AtRest.isBuiltTree(tickDir.getAbsolutePath)) AtRest.gcStale(tickDir)
-      }
+    AtRest.buildOnce(tickDir) {
+      graft.streaming.StreamOps.mvDeltaTick(
+        Tables.lineitem(s, d).where(col("l_shipdate") >= MvCutoff),
+        0L, tickDir.getAbsolutePath)
     }
     graft.plans.MvRewrite.uninstall(s, "mv_lineitem_rollup")
     val target = mvStoredRollup(s, d).queryExecution.optimizedPlan

@@ -616,10 +616,11 @@ object Similarity {
     // work that ran strictly back to back; five driver threads let the
     // scheduler overlap the many small training jobs. Plans, counts and
     // values are unchanged.
-    val (nq, builtMethods) = graft.awaitBoth(
-      () => truth.select("q_id").distinct().count(),
-      () => graft.awaitAll(methods.map { case (_, f) => () => f(s, d) }))
-    methods.map(_._1).zip(builtMethods).map { case (name, mdf) =>
+    val truthCount +: built = graft.awaitAll[Any](
+      (() => truth.select("q_id").distinct().count()) +:
+        methods.map { case (_, f) => () => f(s, d) })
+    val nq = truthCount.asInstanceOf[Long]
+    methods.map(_._1).zip(built.map(_.asInstanceOf[DataFrame])).map { case (name, mdf) =>
       mdf.select(col("q_id"), col("neighbor_id"))
         .join(truth.withColumn("hit", lit(1)), Seq("q_id", "neighbor_id"), "left")
         .agg(count(lit(1)).as("n_returned"),
@@ -683,10 +684,10 @@ object Similarity {
       // derive from the already-collected centroid literal — write them
       // from two driver threads (guide §2.6) so the tiny centroid write's
       // job+commit latency hides inside the corpus assignment write
-      graft.awaitBoth(
+      graft.awaitAll(Seq(
         () => centLit.write.mode("overwrite").parquet(centsDir.toString),
         () => graft.AtRest.writePartitioned(assignCells(e, centLit, 1)
-          .select(col("vec_id").as("c_id"), col("cid"), col("ce")), "cid", cellsDir.toString))
+          .select(col("vec_id").as("c_id"), col("cid"), col("ce")), "cid", cellsDir.toString)))
     }
     dirs
   }
@@ -726,11 +727,11 @@ object Similarity {
     // broadcast quantizer and write to different directories — two
     // independent jobs, overlapped from two driver threads (guide §2.6)
     // so the small delta write back-fills the standing write's tail
-    graft.awaitBoth(
+    graft.awaitAll(Seq(
       () => graft.AtRest.writePartitioned(assignCells(hist, centLit, 1)
         .select(col("vec_id").as("c_id"), col("cid"), col("ce")), "cid", histDir.toString),
       () => graft.AtRest.writePartitioned(assignCells(arrivals, centLit, 1)
-        .select(col("vec_id").as("c_id"), col("cid"), col("ce")), "cid", deltaDir.toString))
+        .select(col("vec_id").as("c_id"), col("cid"), col("ce")), "cid", deltaDir.toString)))
     graft.AtRest.gcStale(histDir); graft.AtRest.gcStale(deltaDir)
     // —— search session over standing ∪ delta, read from disk ——
     val cells = s.read.parquet(histDir.toString)
@@ -767,9 +768,9 @@ object Similarity {
       .select(col("q_id"), col("neighbor_id")).persist(StorageLevel.MEMORY_AND_DISK))
     // one index build shared by the three probe variants, overlapped
     // with the truth-cache fill (guide §2.6 — independent lineages)
-    val (_, nq) = graft.awaitBoth(
+    val Seq(_, nq) = graft.awaitAll(Seq(
       () => cells.count(),
-      () => truth.select("q_id").distinct().count())
+      () => truth.select("q_id").distinct().count()))
     // r18 (guide §2.4): the three probe variants each re-joined the cell
     // index and re-evaluated the candidate cosines, though nprobe=1/2
     // candidates are rank-prefixes of nprobe=4's by construction

@@ -27,31 +27,16 @@ package object graft {
   def davg(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast("double") / count(c)
 
-  /** Run two INDEPENDENT driver actions concurrently and return both
-    * results (guide §2.6: Spark's scheduler happily runs several jobs at
-    * once inside one application — actions are only sequential because
-    * driver code calls them sequentially). Used by the eager eval
-    * queries whose two cache-fill counts have disjoint lineages: FIFO
+  /** Run INDEPENDENT driver work concurrently (the first thunk on the
+    * calling thread, the rest on one pool thread each) and return the
+    * results in input order (guide §2.6: Spark's scheduler happily runs
+    * several jobs at once inside one application — actions are only
+    * sequential because driver code calls them sequentially; FIFO
     * scheduling back-fills one pipeline's straggler tail with the
-    * other's tasks. The second action runs on the calling thread, so
-    * only one extra thread exists for the call's duration; exceptions
-    * from either action propagate. */
-  def awaitBoth[A, B](fa: () => A, fb: () => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    try {
-      val fut = pool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = fa()
-      })
-      val b = fb()
-      (fut.get(), b)
-    } finally pool.shutdown()
-  }
-
-  /** N-ary [[awaitBoth]]: run every thunk concurrently (the first on the
-    * calling thread), return results in input order. Only for thunks
-    * whose Spark work is independent — driver actions and model-training
-    * collects are thread-safe; shared caches fill once (the block
-    * manager serializes per-partition computation). */
+    * other's tasks). Only for thunks whose Spark work is independent —
+    * driver actions and model-training collects are thread-safe; shared
+    * caches fill once (the block manager serializes per-partition
+    * computation). Exceptions from any thunk propagate. */
   def awaitAll[T](fs: Seq[() => T]): Seq[T] =
     if (fs.sizeIs <= 1) fs.map(_())
     else {

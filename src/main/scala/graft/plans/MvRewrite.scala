@@ -193,13 +193,13 @@ case class MvRewrite(spark: SparkSession, viewName: String,
       // fails safe on the swapped generation's replaced files, because
       // the captured listing provably predates the swap
       val withDelta = deltaLocation
-        .filter(dd => graft.AtRest.isBuiltTree(dd))
+        .filter(dd => graft.AtRest.isBuilt(new java.io.File(dd)))
         .map { dd =>
           val (base, fresh) =
             graft.streaming.StreamOps.standingSnapshot(spark, location, dd)
           if (fresh.isEmpty) base
           else base.unionByName(
-            graft.streaming.StreamOps.ticksRelation(spark, dd, fresh)
+            graft.AtRest.ticksRelation(spark, dd, fresh)
               .select(base.columns.map(org.apache.spark.sql.functions.col): _*))
         }
         .getOrElse(spark.read.parquet(location))

@@ -93,12 +93,10 @@ object StreamOps {
     * gateway.ts:292/324). The batch is persisted once so the per-module
     * writes don't recompute the source; connection-style setup would
     * live once per foreachBatch invocation (the standard pooling
-    * pattern). Each module write lands under its own `batch_id=<id>`
-    * subdirectory in OVERWRITE mode — the same replay-idempotency
-    * contract as every other maintenance sink here: foreachBatch is
-    * at-least-once, so a bare append would double the batch's rows on
-    * a crash-replay (and a crash mid-loop would duplicate only the
-    * modules written before it — per-batch overwrite heals both). */
+    * pattern). Each module directory is a tick tree
+    * ([[graft.AtRest.writeTick]]): a replay, or a crash mid-loop that
+    * wrote only some modules, rewrites the batch's own ticks. Readers of
+    * `$baseDir/$m` see a `batch_id` column. */
   def routedSink(events: DataFrame, baseDir: String, mods: Seq[String])
       : org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -106,62 +104,13 @@ object StreamOps {
     }.start()
 
   /** One routed tick — exposed so the spec can replay a batch id
-    * verbatim and prove the per-module trees are unchanged.
-    *
-    * LAYOUT NOTE: ticks land as `batch_id=<id>` Hive partitions (the
-    * replay-idempotency contract above), which is a BREAK from the
-    * original flat-append layout — a module tree holding flat part
-    * files next to partition dirs fails Spark's partition discovery
-    * ("conflicting directory structures"), and readers of
-    * `$baseDir/$m` see a new `batch_id` column. [[migrateLegacyFlat]]
-    * heals the first case once per module dir (flat files fold into a
-    * `batch_id=-1` partition, the same legacy id compactTicks uses);
-    * the new column is the documented, intended surface. */
+    * verbatim and prove the per-module trees are unchanged. */
   private[graft] def routedTick(batch: DataFrame, id: Long, baseDir: String,
       mods: Seq[String]): Unit = {
     val cached = batch.persist()
     try mods.foreach { m =>
-      migrateLegacyFlat(new java.io.File(s"$baseDir/$m"))
-      cached.filter(col("mod_name") === m)
-        .write.mode("overwrite").parquet(s"$baseDir/$m/batch_id=$id")
+      graft.AtRest.writeTick(cached.filter(col("mod_name") === m), s"$baseDir/$m", id)
     } finally { cached.unpersist(); () }
-  }
-
-  /** One-time migration of a module tree written by the pre-partition
-    * flat-append layout: root-level data files move into a
-    * `batch_id=-1` partition (file renames — no rewrite), so a legacy
-    * tree becomes a valid partitioned tree instead of failing partition
-    * discovery with mixed layouts. Idempotent and crash-tolerant: a
-    * half-moved tree just migrates the remainder on the next tick. */
-  private[graft] def migrateLegacyFlat(modDir: java.io.File): Unit = {
-    val flat = Option(modDir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.isFile &&
-        (f.getName.startsWith("part-") || f.getName == "_SUCCESS"))
-    if (flat.nonEmpty) {
-      val legacy = new java.io.File(modDir, "batch_id=-1")
-      legacy.mkdirs()
-      // The _SUCCESS commit marker moves LAST: listFiles order is
-      // arbitrary, and moving the marker before the data files would
-      // let a crash mid-migration leave batch_id=-1 carrying _SUCCESS
-      // while part- files still sit at the module root — a
-      // committed-tick reader would treat the half-filled legacy
-      // partition as complete. Data first keeps the partition
-      // uncommitted until every legacy data file has landed.
-      val ordered = flat.sortBy(_.getName == "_SUCCESS")
-      ordered.foreach { f =>
-        val dst = new java.io.File(legacy, f.getName)
-        // a failed rename must FAIL the tick, not silently leave the
-        // mixed flat+partitioned layout this migration exists to heal
-        // (that state breaks every subsequent partition discovery). The
-        // one benign collision: the destination already holds this file
-        // from a half-completed earlier migration — drop the source.
-        if (!f.renameTo(dst)) {
-          if (dst.isFile) { f.delete(); () }
-          else throw new java.io.IOException(
-            s"migrateLegacyFlat: cannot move $f into $legacy")
-        }
-      }
-    }
   }
 
   /** STREAMING ANN query serving over the AT-REST IVF index — the
@@ -177,19 +126,14 @@ object StreamOps {
     * batch id). The standing corpus is never re-embedded, never
     * re-clustered, never rescanned — each tick costs
     * O(batch × probed cells). StreamingSpec proves the union of ticks
-    * equals the batch q_sim_ivf answer set exactly.
+    * equals the batch q_sim_ivf answer set exactly. The output is a
+    * tick tree ([[graft.AtRest.writeTick]]).
     *
-    * Delivery: foreachBatch is at-least-once, so the append is made
-    * IDEMPOTENT per micro-batch — each tick writes to a
-    * `batch_id=<id>` subdirectory and a replayed batch OVERWRITES its
-    * own directory instead of double-appending (the readers glob the
-    * directory tree, and `batch_id` is recovered from the partition
-    * path). */
-  /** `deltaDir`: optional [[ivfDeltaSink]] tree — when present, each
-    * tick serves over standing ∪ delta, so vectors ingested by the
-    * maintenance stream become searchable without an index rebuild
-    * (both trees are cid-partitioned, so both scans prune to the
-    * probed cells). */
+    * `deltaDir`: optional [[ivfDeltaSink]] tree — when present, each
+    * tick serves over standing ∪ the delta's committed ticks, so vectors
+    * ingested by the maintenance stream become searchable without an
+    * index rebuild (both trees are cid-partitioned, so both scans prune
+    * to the probed cells). */
   def annQuerySink(queries: DataFrame, cellsDir: String, centsDir: String, outDir: String,
       deltaDir: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -207,13 +151,11 @@ object StreamOps {
     try {
       if (!q.isEmpty) {
         val standing = s.read.parquet(cellsDir).select("c_id", "cid", "ce")
-        val cells = deltaDir.filter(dd => graft.AtRest.isBuiltTree(dd))
-          .map(dd => standing.unionByName(
-            s.read.parquet(dd).select("c_id", "cid", "ce")))
+        val cells = deltaDir.flatMap(graft.AtRest.committedRelation(s, _))
+          .map(dd => standing.unionByName(dd.select("c_id", "cid", "ce")))
           .getOrElse(standing)
         val cents = s.read.parquet(centsDir)
-        graft.operators.Similarity.ivfSearch(cells, cents, q)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+        graft.AtRest.writeTick(graft.operators.Similarity.ivfSearch(cells, cents, q), outDir, id)
       }
     } finally { q.unpersist(); () }
   }
@@ -228,10 +170,10 @@ object StreamOps {
     * tree. The standing index is never touched, nothing is retrained —
     * the minutes-cadence vector-store ingest shape at 100 TB.
     *
-    * Layout: each tick writes `batch_id=<id>/cid=<n>/…` — idempotent
-    * per batch (a replay overwrites its own subtree) AND still
-    * cid-partitioned, so a search over standing ∪ delta prunes the
-    * delta tree to the probed cells exactly like the standing one.
+    * The delta is a tick tree ([[graft.AtRest.writeTick]]) whose ticks
+    * are cid-partitioned (`<tick>/cid=<n>/…`), so a search over
+    * standing ∪ delta prunes the delta to the probed cells exactly like
+    * the standing one.
     * [[graft.AtRest.compactTicks]] folds accumulated ticks. */
   def ivfDeltaSink(vectors: DataFrame, centsDir: String, deltaDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -248,18 +190,17 @@ object StreamOps {
     try {
       if (!v.isEmpty) {
         val cents = s.read.parquet(centsDir)
-        graft.operators.Similarity.assignCells(v, cents, 1)
-          .select(col("vec_id").as("c_id"), col("cid"), col("ce"))
-          .write.partitionBy("cid").mode("overwrite").parquet(s"$deltaDir/batch_id=$id")
+        graft.AtRest.writeTick(graft.operators.Similarity.assignCells(v, cents, 1)
+          .select(col("vec_id").as("c_id"), col("cid"), col("ce")), deltaDir, id, "cid")
       }
     } finally { v.unpersist(); () }
   }
 
   /** STREAMING TAKEDOWN via TOMBSTONES — the delete path that never
     * rewrites the standing indexes on the ingest cadence: delete
-    * requests arrive as a stream of doc_id rows; each tick appends the
-    * batch's ids as a tombstone partition (`batch_id=<id>`, overwrite —
-    * idempotent under at-least-once replay like the other index sinks).
+    * requests arrive as a stream of doc_id rows; each tick writes the
+    * batch's ids as one tick of the tombstone tree
+    * ([[graft.AtRest.writeTick]]).
     * Serving reads apply the tombstone set as a broadcast anti-join
     * ([[graft.operators.Dedup.pairsAtRestServing]] — correct by the
     * pair-locality identity q_takedown_purge proves), and
@@ -279,8 +220,7 @@ object StreamOps {
   private[graft] def takedownTick(batch: DataFrame, id: Long, tombDir: String): Unit = {
     val t = batch.select(col("doc_id")).distinct().persist()
     try {
-      if (!t.isEmpty)
-        t.write.mode("overwrite").parquet(s"$tombDir/batch_id=$id")
+      if (!t.isEmpty) graft.AtRest.writeTick(t, tombDir, id)
     } finally { t.unpersist(); () }
   }
 
@@ -302,10 +242,8 @@ object StreamOps {
     * profile, one appended row. The standing corpus is never
     * rescanned.
     *
-    * Delivery: idempotent per micro-batch — each tick OVERWRITES its
-    * own `batch_id=<id>` subdirectory, so an at-least-once foreachBatch
-    * replay cannot double-append a tick row. A missing profile fails
-    * fast HERE (at sink creation), not inside the running stream; an
+    * The rows form a tick tree ([[graft.AtRest.writeTick]]). A missing
+    * profile fails fast HERE (at sink creation), not inside the running stream; an
     * empty profile skips the tick (no denominator to compare against)
     * instead of NPE-ing the query. */
   def driftMonitorSink(docs: DataFrame, profileDir: String, outDir: String)
@@ -324,7 +262,7 @@ object StreamOps {
         val tq = prof.agg(coalesce(sum("c_q"), lit(0L)).cast("long")).head.getLong(0)
         if (tp > 0 && tq > 0) {
           val grid = s.range(1024).select(col("id").as("b"))
-          grid
+          val row = grid
             .join(toks.groupBy("b").agg(count(lit(1)).as("c_p")), Seq("b"), "left")
             .join(prof, Seq("b"), "left")
             .withColumn("p", expr(
@@ -337,7 +275,7 @@ object StreamOps {
             .agg(sum("cfp").as("js_fp"))
             .select(lit(tp).as("n_tokens"),
               col("js_fp"), round(col("js_fp") / lit(1e12), 6).as("js"))
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+          graft.AtRest.writeTick(row, outDir, id)
         }
       } finally { toks.unpersist(); () }
     }.start()
@@ -367,25 +305,12 @@ object StreamOps {
     * O(arrivals × band matches) — the minutes-not-nightly refresh shape
     * at 100 TB.
     *
-    * Delivery: foreachBatch is at-least-once, so BOTH appends are made
-    * idempotent per micro-batch — each tick OVERWRITES its own
-    * `batch_id=<id>` subdirectory of the sig/pair index trees, and the
-    * standing-index read excludes the current batch's own subdirectory
-    * (a partition-pruned filter), so a replayed batch sees exactly the
-    * state its first attempt saw and rewrites exactly the same rows.
-    * A restart/retry between the two writes therefore cannot
-    * double-append (StreamingSpec replays a batch mid-stream to prove
-    * it). Index readers glob the tree; [[graft.AtRest.compactTicks]]
-    * folds accumulated tick fragments into a bounded file count — and
-    * structurally NEVER folds the newest tick (its replay fence), so a
-    * maintenance pass racing an uncommitted tick cannot move that
-    * tick's rows into history where the `batch_id =!= id` replay
-    * exclusion would no longer see them. The fence covers replay ONLY:
-    * compaction must still run BETWEEN ticks, never concurrent with an
-    * in-flight foreachBatch write — a tick landing inside the
-    * rewrite/swap window is invisible to the compaction's initial
-    * listing and is lost either way (see [[graft.AtRest.compactTicks]]'s
-    * scheduling caveat). */
+    * Both indexes are tick trees ([[graft.AtRest.writeTick]]); the
+    * standing-signature read excludes the batch's own tick, so a replay
+    * — even one after a crash between the two writes — rewrites exactly
+    * the same rows (StreamingSpec replays a batch mid-stream to prove
+    * it). [[graft.AtRest.compactTicks]] folds accumulated ticks into a
+    * bounded file count between ticks. */
   def pairIndexRefreshSink(docs: DataFrame, sigsDir: String, pairsDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -403,15 +328,7 @@ object StreamOps {
     try {
       if (newSigs.isEmpty) ()
       else {
-        // isBuiltTree (not bare isDirectory): a crash during the very
-        // first tick leaves a directory with no completed partition —
-        // reading it would fail schema inference; the replay must see
-        // "no standing index" exactly as the first attempt did
-        val standing =
-          if (graft.AtRest.isBuiltTree(sigsDir))
-            Some(s.read.parquet(sigsDir)
-              .filter(col("batch_id") =!= id).drop("batch_id"))
-          else None
+        val standing = graft.AtRest.committedRelation(s, sigsDir, except = Some(id))
         val all = standing.map(_.unionByName(newSigs)).getOrElse(newSigs)
         val newBands = Dedup.bandsOf(newSigs)
           .withColumnRenamed("doc_id", "y_id")
@@ -423,9 +340,8 @@ object StreamOps {
           .select(least(col("x.doc_id"), col("y_id")).as("a_id"),
             greatest(col("x.doc_id"), col("y_id")).as("b_id"))
           .distinct()
-        Dedup.verifiedPairs(cand, all)
-          .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$id")
-        newSigs.write.mode("overwrite").parquet(s"$sigsDir/batch_id=$id")
+        graft.AtRest.writeTick(Dedup.verifiedPairs(cand, all), pairsDir, id)
+        graft.AtRest.writeTick(newSigs, sigsDir, id)
       }
     } finally { newSigs.unpersist(); () }
   }
@@ -436,26 +352,20 @@ object StreamOps {
     * lineitem-shaped rows arrive as a stream; each micro-batch computes
     * its EXACT associative partials at the view's grain (one map-side-
     * combined aggregate over the batch — Scale.mvPartialsOf, the same
-    * builder every at-rest generation uses) and appends them as one
-    * |batch groups|-row tick under `batch_id=<id>`. The serving
+    * builder every at-rest generation uses) and writes them as one
+    * |batch groups|-row tick ([[graft.AtRest.writeTick]]). The serving
     * generation is never touched on the ingest cadence; [[mvFoldTicks]]
     * folds accumulated ticks into the next serving generation on the
     * maintenance cadence, and [[mvStanding]] serves a fresh view
     * (generation ⊕ unfolded ticks) in between — at 100 TB each tick
     * costs O(batch), the fold O(|groups| · ticks).
     *
-    * Delivery: foreachBatch is at-least-once, so the tick write is
-    * idempotent — a replayed batch OVERWRITES its own `batch_id=<id>`
-    * subdirectory. Because MV partials are ADDITIVE (unlike the pair
-    * index's set semantics), a tick folded into the serving generation
-    * must never be re-read: the fold records its high-water mark in a
+    * Because MV partials are ADDITIVE (unlike the pair index's set
+    * semantics), a tick folded into the serving generation must never be
+    * re-read: the fold records its high-water mark in a
     * `_FOLDED_THROUGH` file written into the NEW generation before the
-    * atomic swap (so mark and fold commit together), and — like
-    * [[graft.AtRest.compactTicks]]'s replay fence — never folds the
-    * NEWEST tick, whose checkpoint may not have committed yet. A tick
-    * with a successor tick can no longer replay (its checkpoint
-    * committed before the successor started), so every folded tick is
-    * replay-dead by construction. */
+    * atomic swap (so mark and fold commit together), and keeps the
+    * tick-tree replay fence, so every folded tick is replay-dead. */
   def mvDeltaSink(rows: DataFrame, deltaDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     rows.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
@@ -467,18 +377,8 @@ object StreamOps {
   private[graft] def mvDeltaTick(batch: DataFrame, id: Long, deltaDir: String): Unit = {
     val p = graft.operators.Scale.mvPartialsOf(batch).persist()
     try {
-      if (!p.isEmpty)
-        p.write.mode("overwrite").parquet(s"$deltaDir/batch_id=$id")
+      if (!p.isEmpty) graft.AtRest.writeTick(p, deltaDir, id)
     } finally { p.unpersist(); () }
-  }
-
-  /** Completed (committed `_SUCCESS`) tick ids under a delta tree. */
-  private[graft] def completedTicks(deltaDir: String): Seq[Long] = {
-    val d = new java.io.File(deltaDir)
-    Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.getName.startsWith("batch_id=") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getName.stripPrefix("batch_id=").toLong).sorted
   }
 
   /** The fold high-water mark: highest batch_id already folded into the
@@ -488,16 +388,6 @@ object StreamOps {
     if (f.isFile) new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong
     else -1L
   }
-
-  /** The delta tree restricted to `ids`, at partials grain (batch_id
-    * provenance dropped) — the ONE reading of the tick layout shared by
-    * the fold, the standing view, and the MV rewrite's serving scan. */
-  private[graft] def ticksRelation(s: org.apache.spark.sql.SparkSession,
-      deltaDir: String, ids: Seq[Long]): DataFrame =
-    s.read.parquet(deltaDir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-      .filter(col("batch_id").isin(ids.map(Long.box): _*))
-      .drop("batch_id")
 
   /** Snapshot-consistent (serving generation, fresh ticks) pair for a
     * standing read: the mark, the GENERATION'S FILE LISTING, and the
@@ -536,7 +426,7 @@ object StreamOps {
             if (foldedThrough(servingDir) == hwm) throw e
             None
         }
-      val fresh = completedTicks(deltaDir).filter(_ > hwm)
+      val fresh = graft.AtRest.committedTicks(deltaDir).filter(_ > hwm)
       serving match {
         case Some(g) if foldedThrough(servingDir) == hwm => return (g, fresh)
         case _ =>
@@ -551,9 +441,9 @@ object StreamOps {
     throw new IllegalStateException("unreachable")
   }
 
-  /** MAINTENANCE fold: serving generation ⊕ every completed, unfolded,
+  /** MAINTENANCE fold: serving generation ⊕ every committed, unfolded,
     * non-newest tick → the NEXT serving generation (atomic two-rename
-    * swap, same contract as AtRest.compact), with the new high-water
+    * swap, same contract as graft.AtRest.compact), with the new high-water
     * mark committed inside the swapped directory. Idempotent: a re-run
     * sees the advanced mark and folds nothing; a crash before the swap
     * leaves the old generation serving; a crash after the swap cannot
@@ -571,9 +461,9 @@ object StreamOps {
     // other at-rest maintenance op since round 14.
     graft.AtRest.restoreCrashedSwap(new java.io.File(servingDir))
     val hwm = foldedThrough(servingDir)
-    val foldable = completedTicks(deltaDir).filter(_ > hwm).dropRight(1)
+    val foldable = graft.AtRest.foldable(graft.AtRest.committedTicks(deltaDir).filter(_ > hwm))
     if (foldable.isEmpty) return
-    val ticks = ticksRelation(s, deltaDir, foldable)
+    val ticks = graft.AtRest.ticksRelation(s, deltaDir, foldable)
     val serving = s.read.parquet(servingDir)
     val tmp = servingDir + ".compact-tmp"
     graft.operators.Scale.mvFoldPartials(Seq(serving, ticks))
@@ -588,14 +478,11 @@ object StreamOps {
     // exclusion makes retained ticks harmless, deletion is the only
     // unrecoverable branch
     if (graft.AtRest.swapInPlace(servingDir, tmp, "mvFoldTicks"))
-      Option(new java.io.File(deltaDir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("batch_id=") &&
-          f.getName.stripPrefix("batch_id=").toLong <= foldable.max)
-        .foreach(graft.AtRest.deleteRecursively)
+      graft.AtRest.dropTicks(deltaDir, foldable.max)
   }
 
   /** The CURRENT standing view at partials grain: serving generation ⊕
-    * completed unfolded ticks — what a dashboard reads between folds
+    * committed unfolded ticks — what a dashboard reads between folds
     * (freshness without waiting for maintenance). Uses the validated
     * [[standingSnapshot]] (generation listing captured inside the
     * validated section) so a concurrent fold can neither pair a stale
@@ -606,7 +493,7 @@ object StreamOps {
     val (serving, fresh) = standingSnapshot(s, servingDir, deltaDir)
     if (fresh.isEmpty) serving
     else graft.operators.Scale.mvFoldPartials(Seq(serving,
-      ticksRelation(s, deltaDir, fresh)))
+      graft.AtRest.ticksRelation(s, deltaDir, fresh)))
   }
 
   /** CDC UPSERT sink — the STREAMING face of `q_merge_upsert`: each

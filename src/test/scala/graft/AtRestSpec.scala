@@ -67,6 +67,60 @@ class AtRestSpec extends SparkSpec {
     assert(resumed.filter(col("batch_id") === 3L).count() == 1L)
   }
 
+  test("one committed-tick definition: root marker, per-tick markers, a torn tick, a missing tree") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_committed").toString
+    def tick(dir: String, id: Long, committed: Boolean): Unit = {
+      Seq(Tuple1(id)).toDF("doc_id").write.parquet(s"$dir/batch_id=$id")
+      if (!committed) new java.io.File(s"$dir/batch_id=$id", "_SUCCESS").delete()
+    }
+    // (layout, build, committed ids, committed dirs relative to the
+    // tree, doc_ids the committed relation reads)
+    val layouts: Seq[(String, String => Unit, Seq[Long], Seq[String], Set[Long])] = Seq(
+      ("root marker", { d =>
+        Seq((1L, -1L), (2L, 4L)).toDF("doc_id", "batch_id")
+          .write.partitionBy("batch_id").parquet(d)
+        tick(d, 5L, committed = true)
+      }, Seq(-1L, 4L, 5L), Seq(""), Set(1L, 2L, 5L)),
+      ("per-tick markers", { d =>
+        Seq(0L, 1L, 2L).foreach(tick(d, _, committed = true))
+      }, Seq(0L, 1L, 2L), Seq("batch_id=0", "batch_id=1", "batch_id=2"), Set(0L, 1L, 2L)),
+      ("torn tick", { d =>
+        tick(d, 0L, committed = true); tick(d, 1L, committed = false)
+      }, Seq(0L), Seq("batch_id=0"), Set(0L)),
+      ("missing tree", _ => (), Nil, Nil, Set.empty[Long]))
+    layouts.foreach { case (name, build, ids, dirs, rows) =>
+      val dir = s"$base/${name.replace(' ', '_')}"
+      build(dir)
+      assert(AtRest.committedTicks(dir) == ids, name)
+      assert(AtRest.committedTickDirs(dir).map(_.getPath) ==
+        dirs.map(r => new java.io.File(dir, r).getPath), name)
+      assert(AtRest.isBuilt(new java.io.File(dir)) == dirs.nonEmpty, name)
+      assert(AtRest.committedRelation(spark, dir).map(_.as[Long].collect().toSet)
+        .getOrElse(Set.empty) == rows, name)
+    }
+    // the replay exclusion: a tick reading its own tree never sees itself
+    val perTick = s"$base/per-tick_markers"
+    assert(AtRest.committedRelation(spark, perTick, except = Some(2L))
+      .map(_.as[Long].collect().toSet).contains(Set(0L, 1L)))
+  }
+
+  test("compactTicks folds only committed ticks: a torn tick is neither folded, fenced nor kept") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_cticks_torn").toString + "/pairs"
+    for (id <- 0 to 3)
+      Seq((id.toLong, 0L)).toDF("a_id", "b_id").write.parquet(s"$dir/batch_id=$id")
+    new java.io.File(s"$dir/batch_id=3", "_SUCCESS").delete() // torn newest write
+    AtRest.compactTicks(spark, dir, Seq("a_id"), numFiles = 1)
+    val got = spark.read.parquet(dir)
+      .select(col("a_id"), col("batch_id").cast("long")).as[(Long, Long)].collect().toSet
+    // ticks 0-1 fold, the newest COMMITTED tick (2) stays fenced, and the
+    // torn tick's rows appear nowhere: the rewritten tree's root marker
+    // would otherwise commit them (its batch replays and rewrites them)
+    assert(got == Set((0L, -1L), (1L, -1L), (2L, 2L)), got)
+    assert(!new java.io.File(s"$dir/batch_id=3").exists, "torn tick carried into the rewrite")
+  }
+
   test("crash between the swap renames: the next reader heals the index (backup or finished rewrite)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_crash").toString + "/idx"

@@ -550,18 +550,20 @@ class PlanShapeSpec extends SparkSpec {
     // (b) the history artifact the refresh folded from exists at rest,
     // (c) the refresh-built generation is bit-identical to a
     //     from-scratch build of the view definition.
-    val p = plan("q_mv_refresh_serve")
+    val executed = SparkEntry.queries("q_mv_refresh_serve")(spark, sf).queryExecution.executedPlan
+    val p = executed.toString
     val servingDir = operators.Scale.mvServingDir(spark, sf)
     try {
-      // the plan's InMemoryFileIndex display truncates the path ~12
-      // chars into the generation name, so match the FAMILY DIR WITH
-      // ITS SLASH (which alone rules out mv_lineitem_rollup_hist_v1 —
-      // a bare "mv_lineitem_rollup" substring would not) plus as much
-      // of the name as survives: the full source tag and the leading
-      // fingerprint hex (the tag alone is shared by every same-corpus
-      // generation and would not pin WHICH generation is read)
-      assert(p.contains(s"${servingDir.getParentFile.getName}/${servingDir.getName.take(12)}"),
-        s"consumer must read the refresh-built serving generation:\n${p.take(1200)}")
+      // the scans' root paths, not the plan text: the printed Location
+      // is abbreviated (spark.sql.maxMetadataStringLength), so how much
+      // of the generation name survives depends on the checkout path
+      val roots = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(executed) {
+          case scan: org.apache.spark.sql.execution.FileSourceScanExec =>
+            scan.relation.location.rootPaths.map(r => new java.io.File(r.toUri).getPath)
+        }.flatten
+      assert(roots.contains(servingDir.getAbsolutePath),
+        s"consumer must read the refresh-built serving generation, read: ${roots.mkString(", ")}")
       assert(!p.contains("lineitem.parquet"),
         "served consumer must not touch the fact table")
       val histDir = new java.io.File(operators.Scale.mvHistAtRest(spark, sf))

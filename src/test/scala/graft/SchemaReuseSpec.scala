@@ -64,6 +64,25 @@ class SchemaReuseSpec extends SparkSpec {
     assert(jobsStartedBy(Tables.orders(spark, sf))._2 == 0)
   }
 
+  test("a schema-cached Tables.load starts no process") {
+    import scala.jdk.CollectionConverters._
+    val d = tempDir("graft_schema_noproc")
+    spark.range(400).repartition(8).write.parquet(s"$d/t.parquet")
+    Tables.load(spark, d, "t")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() =>
+      while (running.get) ProcessHandle.current().descendants().iterator().asScala
+        .foreach(_.info().commandLine().ifPresent(seen.add(_))))
+    poller.start()
+    try (1 to 20).foreach(_ => Tables.load(spark, d, "t"))
+    finally {
+      running.set(false)
+      poller.join()
+    }
+    assert(!seen.asScala.exists(_.contains(d)), seen.asScala.filter(_.contains(d)).take(5))
+  }
+
   test("rewriting the file at the same path with an added or retyped column re-infers") {
     val d = tempDir("graft_schema_rewrite")
     spark.range(50).select(col("id"), col("id").cast("int").as("v"))

@@ -155,10 +155,13 @@ class SoakSpec extends SparkSpec {
         spark.read.parquet(s"$src/t.parquet").write.mode("overwrite").parquet(f.getPath)
       }
       AtRest.gcStale(f)
-      val fam = f.getParentFile
-      val gens = Option(fam.listFiles()).getOrElse(Array.empty).count(_.isDirectory)
-      val locks = Option(fam.listFiles()).getOrElse(Array.empty)
-        .count(_.getName.endsWith(".maintlock"))
+      // count only this source's generations: the shared at-rest root
+      // may hold live generations of other checkouts' soak sources
+      val ownTag = f.getName.takeWhile(_ != '_') + "_"
+      val own = Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith(ownTag))
+      val gens = own.count(_.isDirectory)
+      val locks = own.count(_.getName.endsWith(".maintlock"))
       assert(gens <= 1, s"generations accumulating at cycle $k: $gens")
       assert(locks <= 1, s"generation lock files accumulating at cycle $k: $locks")
     }

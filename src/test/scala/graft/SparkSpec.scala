@@ -19,6 +19,10 @@ object SparkSpec {
       .config("javax.jdo.option.ConnectionURL",
         "jdbc:derby:;databaseName=/tmp/graft_metastore;create=true")
       .config("spark.ui.enabled", "false")
+      // plan-shape assertions read scan locations from the printed plan;
+      // the default 100-char abbreviation keeps more or less of an
+      // at-rest path depending on where the repository is checked out
+      .config("spark.sql.maxMetadataStringLength", "1000")
       .enableHiveSupport())
       .getOrCreate()
     // ERROR, not WARN (r18): the full suite emitted thousands of

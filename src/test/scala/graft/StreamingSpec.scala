@@ -219,31 +219,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("routed sink migrates a legacy flat module tree into a batch_id=-1 partition") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_routed_legacy").toString
-    // a module tree written by the pre-partition flat-append layout:
-    // root-level part files, no batch_id= dirs
-    Seq(("click", 1L), ("click", 2L)).toDF("mod_name", "payload")
-      .write.parquet(s"$dir/click")
-    assert(new java.io.File(s"$dir/click").listFiles().exists(_.isFile),
-      "precondition: legacy tree has root-level files")
-    // the next tick must heal the layout, not fail partition discovery
-    graft.streaming.StreamOps.routedTick(
-      Seq(("click", 3L)).toDF("mod_name", "payload"), 0L, dir, Seq("click"))
-    val got = spark.read.parquet(s"$dir/click")
-    assert(got.count() == 3, "legacy rows + new tick rows all readable")
-    assert(got.filter(col("batch_id") === -1L).count() == 2,
-      "legacy rows live under the batch_id=-1 partition")
-    assert(!new java.io.File(s"$dir/click").listFiles().exists(f =>
-      f.isFile && f.getName.startsWith("part-")),
-      "no flat data files remain at the module root")
-    // replaying the tick after migration stays idempotent
-    graft.streaming.StreamOps.routedTick(
-      Seq(("click", 3L)).toDF("mod_name", "payload"), 0L, dir, Seq("click"))
-    assert(spark.read.parquet(s"$dir/click").count() == 3)
-  }
-
   test("session windows run identically as a stream (same builder as the batch oracle query)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -618,7 +593,7 @@ class StreamingSpec extends SparkSpec {
           val pairsDir = AtRest.dir(spark, sf, "lsh_pairs", "documents",
             operators.Dedup.LshIndexParams)
           AtRest.applyTombstones(spark, pairsDir.toString, tombDir, Seq("a_id", "b_id"))
-          assert(!AtRest.isBuiltTree(tombDir), "tombstones must be spent after the fold")
+          assert(!AtRest.isBuilt(new java.io.File(tombDir)), "tombstones must be spent after the fold")
           val raw = spark.read.parquet(pairsDir.toString).select(cols.head, cols.tail: _*)
           assert(raw.exceptAll(truth).isEmpty && truth.exceptAll(raw).isEmpty,
             "physically-folded index must equal the redacted rebuild")
@@ -732,7 +707,7 @@ class StreamingSpec extends SparkSpec {
       StreamOps.mvFoldTicks(spark, servingDir, deltaDir)
       assert(StreamOps.foldedThrough(servingDir) == 1L,
         "fold must record its high-water mark inside the new generation")
-      assert(StreamOps.completedTicks(deltaDir) == Seq(2L),
+      assert(AtRest.committedTicks(deltaDir) == Seq(2L),
         "folded ticks must be GC'd; the fenced newest tick must survive")
       val gen = spark.read.parquet(servingDir)
       val expectGen = operators.Scale.mvPartialsOf(

@@ -7,7 +7,7 @@
 #   tools/preflight.sh            # compile + tests + sf0.001 Verify + oracle check
 #                                 # + the benchmark helpers' unit tests
 #   tools/preflight.sh --fast     # run only the harness, session-surface,
-#                                 # streaming and cross-process at-rest specs
+#                                 # streaming, at-rest and schema-reuse specs
 #                                 # instead of the full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -45,11 +45,19 @@ if grep -rnE 'registerTimer|deleteTimer' src/main/scala/graft/streaming \
   echo "event-time timer outside EventTimeBuffer/CorrelatorV2/TemporalJoin (listed above)" >&2
   exit 1
 fi
+# One tick-tree layout: the `batch_id=<id>` tick directories and the
+# `_SUCCESS` commit marker are named in src/main only by AtRest, which
+# owns the tick write, the committed-tick set and the replay fence.
+if grep -rnE '"[^"]*(batch_id=|_SUCCESS)[^"]*"' src/main \
+    | grep -vE '^src/main/scala/graft/AtRest\.scala:'; then
+  echo "tick-tree layout literal outside AtRest.scala (listed above)" >&2
+  exit 1
+fi
 sbt -batch "compile; Test/compile" | tail -2
 if [[ "${1:-}" != "--fast" ]]; then
   sbt -batch test | tail -3
 else
-  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec graft.ExtensionsSpec graft.DuckDbDialectSpec graft.CheckpointFilesSpec graft.CorrelatorV2Spec graft.RateLimitStreamSpec graft.AbStreamSpec graft.CusumStreamSpec graft.SessionStreamSpec graft.TransitionStreamSpec graft.CrossProcessAtRestSpec" | tail -3
+  sbt -batch "testOnly graft.HarnessSpec graft.BenchSuspectSpec graft.ExtensionsSpec graft.DuckDbDialectSpec graft.CheckpointFilesSpec graft.CorrelatorV2Spec graft.RateLimitStreamSpec graft.AbStreamSpec graft.CusumStreamSpec graft.SessionStreamSpec graft.TransitionStreamSpec graft.CrossProcessAtRestSpec graft.AtRestSpec graft.StreamingSpec graft.SchemaReuseSpec" | tail -3
 fi
 OUT=/tmp/preflight_verify
 rm -rf "$OUT"
