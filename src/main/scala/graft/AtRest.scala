@@ -138,12 +138,16 @@ object AtRest {
     }
   }
 
-  /** The one "built" test, for generations and tick trees alike: the
-    * directory has a committed part ([[committedTickDirs]]) — for a
-    * generation, Spark's `_SUCCESS` marker at its root. Also the
+  /** The one "built" test, for generations and tick trees alike: a
+    * generation carries Spark's `_SUCCESS` marker at its root, a tick
+    * tree has a committed tick ([[committedTicks]]). The root marker is
+    * checked first, so a generation is never listed. Also the
     * crash-recovery read barrier: a maintenance swap that died between
     * its two renames is healed before the check. */
-  def isBuilt(dir: java.io.File): Boolean = committedTickDirs(dir.getPath).nonEmpty
+  def isBuilt(dir: java.io.File): Boolean = {
+    restoreCrashedSwap(dir)
+    marked(dir) || commitState(dir).nonEmpty
+  }
 
   /** The single build-if-absent primitive: when any of `dirs` is not
     * [[isBuilt]], run `write` (which must build every one of them), then
@@ -198,8 +202,8 @@ object AtRest {
     *    rewrites its own tick instead of appending a second copy (and a
     *    crash mid-batch is healed by the same rewrite).
     *  - Committed set ([[committedTicks]], [[committedTickDirs]]): tick
-    *    `k` is committed iff the root carries `_SUCCESS` (a tree that
-    *    [[compactTicks]] rewrote whole) or `batch_id=k` carries its own.
+    *    `k` is committed iff `batch_id=k` carries its own `_SUCCESS`;
+    *    nothing else commits a tick, and a tree root carries no marker.
     *    A torn tick (no marker) is invisible to every reader and fold,
     *    and the fold that rewrites the tree drops it; its batch replays.
     *    A swap that died between its renames is healed first.
@@ -235,27 +239,23 @@ object AtRest {
       .parquet(tickDir(dir, id).getPath)
   }
 
-  /** (root committed, committed ticks ascending) — the one committed-set
+  /** The committed ticks of `d`, ascending — the one committed-set
     * definition; a missing directory has none. */
-  private def commitState(dir: String): (Boolean, Seq[(Long, java.io.File)]) = {
-    val d = new java.io.File(dir)
+  private def commitState(d: java.io.File): Seq[(Long, java.io.File)] = {
     restoreCrashedSwap(d)
-    val whole = marked(d)
-    (whole, tickDirs(d).filter { case (_, f) => whole || marked(f) })
+    tickDirs(d).filter { case (_, f) => marked(f) }
   }
 
   /** Ids of the committed ticks of `dir`, ascending. */
-  private[graft] def committedTicks(dir: String): Seq[Long] = commitState(dir)._2.map(_._1)
+  private[graft] def committedTicks(dir: String): Seq[Long] =
+    commitState(new java.io.File(dir)).map(_._1)
 
-  /** The committed portion of `dir` as concrete directories: the root
-    * itself when the root is committed, otherwise every committed tick.
-    * A consumer of a tree that is also maintained (read-then-delete)
-    * reads exactly this set, or the serving view and the maintenance
-    * pass diverge on a tick that never commits. */
-  private[graft] def committedTickDirs(dir: String): Seq[java.io.File] = {
-    val (whole, ticks) = commitState(dir)
-    if (whole) Seq(new java.io.File(dir)) else ticks.map(_._2)
-  }
+  /** The committed ticks of `dir` as directories. A consumer of a tree
+    * that is also maintained (read-then-delete) reads exactly this set,
+    * or the serving view and the maintenance pass diverge on a tick
+    * that never commits. */
+  private[graft] def committedTickDirs(dir: String): Seq[java.io.File] =
+    commitState(new java.io.File(dir)).map(_._2)
 
   /** The ticks `ids` (committed, non-empty) of `dir` as one relation,
     * `batch_id` dropped. Each tick is named explicitly, so one deleted
@@ -292,7 +292,10 @@ object AtRest {
     * `.compact-tmp`). Every read/maintenance entry point calls this
     * first: if the live dir is absent but the backup exists, prefer the
     * finished rewrite (tmp with its _SUCCESS marker — the compaction DID
-    * complete, only the swap died), else restore the backup.
+    * complete, only the swap died), else restore the backup. A tick-tree
+    * rewrite ([[compactTicks]]) carries no root marker, so its backup is
+    * always restored: the pre-compaction tree is fully committed, and
+    * the fold simply runs again.
     *
     * A crash in the OTHER window — after the second rename succeeded
     * but before the backup cleanup — leaves a stale `.compact-old`
@@ -620,9 +623,10 @@ object AtRest {
     * byte-identical before/after; only the batch_id provenance of
     * compacted history collapses to -1 (AtRestSpec proves both). The
     * newest committed tick is fenced (see the tick-tree contract above)
-    * and re-copied under its own id; it folds on the NEXT pass. A torn
-    * tick is not carried into the rewritten tree, whose root `_SUCCESS`
-    * would otherwise commit it.
+    * and re-copied under its own id; it folds on the NEXT pass. Both
+    * ticks of the rewrite are written with [[writeTick]], so each
+    * carries its own marker; a torn tick is not carried into it, and a
+    * stale `.compact-tmp` of an aborted pass is deleted first.
     *
     * SCHEDULING CAVEAT — the fence addresses replay, NOT write
     * concurrency: run this between ticks, never concurrent with an
@@ -632,22 +636,21 @@ object AtRest {
     * tmp, or written into the renamed-away directory and deleted with
     * the backup: lost data either way. */
   def compactTicks(s: SparkSession, dir: String, sortCols: Seq[String], numFiles: Int = 4): Unit = withMaintenanceLock(dir) {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val (history, positive) = committedTicks(dir).partition(_ < 0)
     val fold = foldable(positive)
     if (fold.isEmpty) return
     val newest = positive.last
     val tmp = dir + ".compact-tmp"
+    deleteRecursively(new java.io.File(tmp))
     // the rewrite is SELF-CONTAINED (folded history + the fenced tick
     // under its own id, re-copied): tmp alone is always a complete
-    // index, so the only dangerous window is the two-rename swap —
-    // which restoreCrashedSwap heals from either side
-    ticksRelation(s, dir, history ++ fold)
+    // index, so the only dangerous window is the two-rename swap, where
+    // restoreCrashedSwap restores the fully committed backup
+    writeTick(ticksRelation(s, dir, history ++ fold)
       .repartition(numFiles)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .withColumn(TickCol, lit(-1L))
-      .unionByName(ticksRelation(s, dir, Seq(newest)).withColumn(TickCol, lit(newest)))
-      .write.partitionBy(TickCol).mode("overwrite").parquet(tmp)
+      .sortWithinPartitions(sortCols.map(col): _*), tmp, -1L)
+    writeTick(ticksRelation(s, dir, Seq(newest)), tmp, newest)
     swapInPlace(dir, tmp, "compactTicks") // rollback-safe: tmp was self-contained
     ()
   }
@@ -661,8 +664,9 @@ object AtRest {
     * correctness never depends on it ([[graft.operators.Dedup
     * .pairsAtRestServing]] applies tombstones logically until then).
     *
-    * The tick set is ENUMERATED FIRST and both the read and the
-    * post-swap delete are scoped to exactly those partitions: deleting
+    * The committed tick set is ENUMERATED FIRST (every tick commits by
+    * its own marker, in a compacted tree too) and both the read and the
+    * post-swap delete are scoped to exactly those tick dirs: deleting
     * the whole tree would silently discard a takedown tick that landed
     * DURING the rewrite — a dropped legal takedown, the one loss this
     * lifecycle exists to make impossible. A tick that arrives
@@ -679,28 +683,7 @@ object AtRest {
     val ticks = committedTickDirs(tombDir)
     if (ticks.isEmpty) return
     restoreCrashedSwap(new java.io.File(indexDir))
-    // In the whole-tree layout (root _SUCCESS — compactTicks' output)
-    // committedTickDirs returns the root ITSELF; deleting that
-    // recursively after the swap would also discard any batch_id= tick
-    // that lands DURING the rewrite — reintroducing for this layout the
-    // dropped-takedown hazard the tick enumeration exists to prevent.
-    // So for that layout, snapshot the root's concrete data entries
-    // NOW, read exactly those, and spend exactly those: a tick arriving
-    // mid-rewrite is a new root entry, untouched, and survives to the
-    // next pass. The root _SUCCESS marker is removed LAST (after the
-    // spent data) so a crash mid-cleanup leaves a still-committed tree
-    // whose remaining entries re-apply idempotently next pass.
-    val rootDir = new java.io.File(tombDir)
-    val wholeTree = ticks.headOption
-      .exists(_.getAbsolutePath == rootDir.getAbsolutePath)
-    val (spent, marker) =
-      if (wholeTree) {
-        val files = Option(rootDir.listFiles()).map(_.toSeq).getOrElse(Nil)
-          .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        (tickDirs(rootDir).map(_._2) ++ files, Some(new java.io.File(rootDir, Marker)))
-      } else (ticks, None)
-    if (spent.isEmpty) return
-    val t = s.read.parquet(spent.map(_.getAbsolutePath): _*)
+    val t = s.read.parquet(ticks.map(_.getAbsolutePath): _*)
       .select("doc_id").distinct()
     val tmp = indexDir + ".compact-tmp"
     val idx = s.read.parquet(indexDir)
@@ -716,10 +699,7 @@ object AtRest {
     // purged index actually went live — on a rollback the un-purged
     // index still serves and the tombstones must survive for the
     // logical serving path and the next maintenance pass
-    if (swapInPlace(indexDir, tmp, "applyTombstones")) {
-      spent.foreach(deleteRecursively)
-      marker.foreach(_.delete())
-    }
+    if (swapInPlace(indexDir, tmp, "applyTombstones")) ticks.foreach(deleteRecursively)
   }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = {

@@ -43,12 +43,7 @@ import org.apache.spark.sql.functions._
   * never inside a measured query.
   */
 object DocCorpus {
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
+  import EmbCorpus.mix64
   private def unif(seed: Long, i: Int): Double =
     (mix64(seed * 131 + i) >>> 11).toDouble / (1L << 53).toDouble
 

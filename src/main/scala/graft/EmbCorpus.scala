@@ -38,8 +38,9 @@ import org.apache.spark.sql.functions._
   */
 object EmbCorpus {
   /** splitmix64 — the standard 64-bit mix; deterministic, seedable,
-    * no java.util.Random state-sharing hazards across partitions. */
-  private def mix64(z0: Long): Long = {
+    * no java.util.Random state-sharing hazards across partitions.
+    * Shared with [[DocCorpus]]. */
+  private[graft] def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL

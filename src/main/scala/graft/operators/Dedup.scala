@@ -114,6 +114,22 @@ object Dedup {
       .select(col("x.doc_id").as("a_id"), col("b_id")).distinct()
   }
 
+  /** DELTA candidates of an incremental refresh: every pair with at
+    * least one member in `arrivals` that shares a band key with any
+    * document of `all` (which contains the arrivals), as normalized
+    * `(a_id < b_id)` — endpoints are ordered by least/greatest, so
+    * arrival order never matters, and one side being an arrival means
+    * pairs among the old documents are never re-enumerated. */
+  private[graft] def deltaCandidates(all: DataFrame, arrivals: DataFrame): DataFrame =
+    bandsOf(all).as("x")
+      .join(bandsOf(arrivals).withColumnRenamed("doc_id", "y_id").as("y"),
+        col("x.band_idx") === col("y.band_idx") &&
+        col("x.band_hash") === col("y.band_hash") &&
+        col("x.doc_id") =!= col("y_id"))
+      .select(least(col("x.doc_id"), col("y_id")).as("a_id"),
+        greatest(col("x.doc_id"), col("y_id")).as("b_id"))
+      .distinct()
+
   /** Exact distinct-shingle Jaccard verification of a candidate pair
     * set against a signature relation; near-dup threshold 0.5. */
   private[graft] def verifiedPairs(cand: DataFrame, sigs: DataFrame): DataFrame = {
@@ -299,14 +315,7 @@ object Dedup {
     val sigs = sigsAtRest(s, d)
     val hist = sigs.filter(col("doc_id") < 2000000L)
     val histPairs = lshPairsFrom(hist) // the at-rest history index
-    val newBands = bandsOf(sigs.filter(col("doc_id") >= 2000000L))
-      .withColumnRenamed("doc_id", "b_id")
-    val deltaCand = bandsOf(sigs).as("x")
-      .join(newBands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-        col("x.band_hash") === col("y.band_hash") &&
-        col("x.doc_id") < col("b_id"))
-      .select(col("x.doc_id").as("a_id"), col("b_id")).distinct()
+    val deltaCand = deltaCandidates(sigs, sigs.filter(col("doc_id") >= 2000000L))
     histPairs.unionByName(verifiedPairs(deltaCand, sigs))
   }
 

@@ -600,14 +600,17 @@ object Multimodal {
     "q_multimodal_patches" -> (qMultimodalPatches _),
     "q_multimodal_audio" -> (qMultimodalAudio _))
 
+  /** Oracle SQL for band `b` of the 64-bit perceptual hash: the 16
+    * bits of cells 16b+1 .. 16b+16, as one BIGINT. */
+  private def bandSql(b: Int): String = (1 to 16).map { i =>
+    val j = 16 * b + i
+    val pos = s"(divide((${j - 1} * length(text)), 64)) + 1"
+    val width = "divide((length(text) + 63), 64)"
+    s"(CASE WHEN CAST(instr('0123456789abcdef', substring(md5(substring(text, $pos, $width)), 1, 1)) - 1 AS BIGINT) % 2 = 1 THEN ${1L << (16 - i)} ELSE 0 END)"
+  }.mkString(" + ")
+
   val oracle: Map[String, String] = Map(
-    "q_multimodal_phash" -> {
-      def bandSql(b: Int): String = (1 to 16).map { i =>
-        val j = 16 * b + i
-        val pos = s"(divide((${j - 1} * length(text)), 64)) + 1"
-        val width = "divide((length(text) + 63), 64)"
-        s"(CASE WHEN CAST(instr('0123456789abcdef', substring(md5(substring(text, $pos, $width)), 1, 1)) - 1 AS BIGINT) % 2 = 1 THEN ${1L << (16 - i)} ELSE 0 END)"
-      }.mkString(" + ")
+    "q_multimodal_phash" ->
       s"""WITH docs AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
          |media AS (
          |  SELECT doc_id, text FROM docs
@@ -627,8 +630,7 @@ object Multimodal {
          |    CAST(bit_count(xor(fa.b0, fb.b0)) + bit_count(xor(fa.b1, fb.b1))
          |      + bit_count(xor(fa.b2, fb.b2)) + bit_count(xor(fa.b3, fb.b3)) AS INTEGER) AS hamming
          |  FROM cand JOIN fp fa ON fa.doc_id = cand.a_id JOIN fp fb ON fb.doc_id = cand.b_id)
-         |SELECT a_id, b_id, hamming FROM h WHERE hamming <= 3""".stripMargin
-    },
+         |SELECT a_id, b_id, hamming FROM h WHERE hamming <= 3""".stripMargin,
     "q_video_dedup" ->
       """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
         |vids AS (
@@ -657,12 +659,6 @@ object Multimodal {
         |  round(CAST(n_match AS DOUBLE) / GREATEST(nfa, nfb), 6) AS frame_sim
         |FROM m WHERE n_match * 5 >= GREATEST(nfa, nfb) * 3""".stripMargin,
     "q_multimodal_phash_eval" -> {
-      def bandSql(b: Int): String = (1 to 16).map { i =>
-        val j = 16 * b + i
-        val pos = s"(divide((${j - 1} * length(text)), 64)) + 1"
-        val width = "divide((length(text) + 63), 64)"
-        s"(CASE WHEN CAST(instr('0123456789abcdef', substring(md5(substring(text, $pos, $width)), 1, 1)) - 1 AS BIGINT) % 2 = 1 THEN ${1L << (16 - i)} ELSE 0 END)"
-      }.mkString(" + ")
       def cellSql(j: String, t: String): String =
         s"substring($t, divide((($j - 1) * length($t)), 64) + 1, divide((length($t) + 63), 64))"
       def keySql(b: Int): String =

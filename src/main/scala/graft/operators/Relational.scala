@@ -4,7 +4,6 @@ import graft._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** The full relational surface (SURVEY.md §2.2): scans, projections,
   * filters, joins (incl. broadcast dims + semi/anti), aggregations,
@@ -24,7 +23,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Relational {
 
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
 
   /** The TPC-H discounted-revenue sum — exact decimal arithmetic, cast
     * to double only at the END (one rounding, mirroring the oracle's
@@ -240,7 +238,7 @@ object Relational {
   def qMathOps(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d).select(
       col("l_orderkey"), col("l_linenumber"),
-      abs(dec(col("l_discount")) - lit(0.05).cast(DecimalType(18, 2)))
+      abs(dec(col("l_discount")) - dec(lit(0.05)))
         .cast("double").as("abs_disc_diff"),
       sqrt(col("l_extendedprice")).as("sqrt_price"),
       (col("l_quantity") * col("l_quantity")).as("qty_sq"),

@@ -3,7 +3,6 @@ package graft.operators
 import graft._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Deeper TPC-H-style relational coverage over the available columns:
   * EXISTS/correlated patterns, nation-pair volume analysis, conditional
@@ -14,7 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object TpchDeep {
 
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
   private def discCol: org.apache.spark.sql.Column =
     dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))
 
@@ -81,7 +79,7 @@ object TpchDeep {
       .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
       .groupBy(year(col("l_shipdate")).as("y"), month(col("l_shipdate")).as("m"))
       .agg(
-        (sum(when(col("p_type") === "PROMO", discCol).otherwise(lit(0).cast(DecimalType(18, 2))))
+        (sum(when(col("p_type") === "PROMO", discCol).otherwise(dec(lit(0))))
           .cast("double") * 100.0 /
          sum(discCol).cast("double")).as("promo_share"),
         count(lit(1)).as("n"))
@@ -266,7 +264,7 @@ object TpchDeep {
       .groupBy(year(col("o_orderdate")).as("o_year"))
       .agg(
         (sum(when(col("supp_nation") === "NATION_1", discCol)
-            .otherwise(lit(0).cast(DecimalType(18, 2)))).cast("double") /
+            .otherwise(dec(lit(0)))).cast("double") /
           sum(discCol).cast("double")).as("mkt_share"),
         count(lit(1)).as("n"))
   }

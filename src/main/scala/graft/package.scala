@@ -22,6 +22,9 @@ package object graft {
   def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast("double")
 
+  /** Money value as DECIMAL(18,2), for exact arithmetic in both engines. */
+  private[graft] def dec(c: Column): Column = c.cast(DecimalType(18, 2))
+
   /** Exact decimal average → double. Oracle:
     * `CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE) / COUNT(x)`. */
   def davg(c: Column, scale: Int = 2): Column =

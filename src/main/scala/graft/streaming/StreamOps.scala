@@ -288,10 +288,8 @@ object StreamOps {
     *
     *  1. signatures the arrivals (map-side minhash — Dedup.sigRelation);
     *  2. forms DELTA candidates by joining the arrivals' band keys
-    *     against the band relation of (standing index ∪ arrivals) —
-    *     endpoints normalized least/greatest so arrival order never
-    *     matters, and one side being new means old–old pairs are never
-    *     re-enumerated;
+    *     against the band relation of (standing index ∪ arrivals)
+    *     (Dedup.deltaCandidates);
     *  3. verifies exact distinct-shingle Jaccard (≥ 0.5) and APPENDS the
     *     verified pairs to the pair index;
     *  4. appends the arrival signatures to the signature index.
@@ -330,17 +328,8 @@ object StreamOps {
       else {
         val standing = graft.AtRest.committedRelation(s, sigsDir, except = Some(id))
         val all = standing.map(_.unionByName(newSigs)).getOrElse(newSigs)
-        val newBands = Dedup.bandsOf(newSigs)
-          .withColumnRenamed("doc_id", "y_id")
-        val cand = Dedup.bandsOf(all).as("x")
-          .join(newBands.as("y"),
-            col("x.band_idx") === col("y.band_idx") &&
-            col("x.band_hash") === col("y.band_hash") &&
-            col("x.doc_id") =!= col("y_id"))
-          .select(least(col("x.doc_id"), col("y_id")).as("a_id"),
-            greatest(col("x.doc_id"), col("y_id")).as("b_id"))
-          .distinct()
-        graft.AtRest.writeTick(Dedup.verifiedPairs(cand, all), pairsDir, id)
+        graft.AtRest.writeTick(
+          Dedup.verifiedPairs(Dedup.deltaCandidates(all, newSigs), all), pairsDir, id)
         graft.AtRest.writeTick(newSigs, sigsDir, id)
       }
     } finally { newSigs.unpersist(); () }
@@ -498,20 +487,22 @@ object StreamOps {
 
   /** CDC UPSERT sink — the STREAMING face of `q_merge_upsert`: each
     * micro-batch of keyed changes `(key, new_bal, seq)` produces a NEW
-    * complete snapshot generation `gen=<batchId>` by merging the
-    * previous generation with the batch under the same three-clause
-    * MERGE semantics (last change per key wins within a batch by `seq`;
-    * matched + negative balance = DELETE; unmatched key = INSERT;
-    * matched = UPDATE). Generations are COPY-ON-WRITE, the way
-    * production table formats execute MERGE on immutable storage:
-    *  - readers take the highest completed generation ([[snapshot]]);
+    * complete snapshot generation by merging the previous generation
+    * with the batch under the same three-clause MERGE semantics (last
+    * change per key wins within a batch by `seq`; matched + negative
+    * balance = DELETE; unmatched key = INSERT; matched = UPDATE).
+    * Generations are COPY-ON-WRITE, the way production table formats
+    * execute MERGE on immutable storage, and are kept as the ticks of a
+    * tick tree ([[graft.AtRest.writeTick]], one generation per batch id):
+    *  - readers take the newest committed generation ([[snapshot]]);
     *  - a replayed batch id rewrites ITS OWN generation from the same
-    *    base (deterministic: the largest completed gen < id), so
-    *    foreachBatch's at-least-once delivery cannot fork or corrupt
-    *    the chain;
+    *    base (deterministic: the newest committed generation below the
+    *    id), so foreachBatch's at-least-once delivery cannot fork or
+    *    corrupt the chain;
     *  - superseded generations remain as TIME-TRAVEL points until
-    *    retention trims to `retain` newest (retain ≥ 2 always, so a
-    *    replay's base generation survives its own tick's cleanup).
+    *    retention ([[graft.AtRest.dropTicks]]) trims to the `retain`
+    *    newest (retain ≥ 2 always, so a replay's base generation
+    *    survives its own tick's cleanup).
     * Scale shape per tick: one full-outer join of snapshot × batch on
     * the key — at 100 TB both sides bucketed on it (q_bucketed_join's
     * layout) makes the rewrite exchange-free, and the rewrite cost is
@@ -524,19 +515,10 @@ object StreamOps {
       upsertTick(batch, id, snapDir, retain)
     }.start()
 
-  /** Completed snapshot generations under `snapDir` (those with a
-    * _SUCCESS marker), ascending. */
-  private[graft] def completedGens(snapDir: String): Seq[Long] = {
-    val d = new java.io.File(snapDir)
-    Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.getName.startsWith("gen=") && graft.AtRest.isBuilt(f))
-      .map(_.getName.stripPrefix("gen=").toLong).sorted
-  }
-
-  /** Latest completed snapshot (empty two-column relation if none). */
+  /** Latest committed snapshot (empty two-column relation if none). */
   def snapshot(s: org.apache.spark.sql.SparkSession, snapDir: String): DataFrame =
-    completedGens(snapDir).lastOption match {
-      case Some(g) => s.read.parquet(s"$snapDir/gen=$g")
+    graft.AtRest.committedTicks(snapDir).lastOption match {
+      case Some(g) => graft.AtRest.ticksRelation(s, snapDir, Seq(g))
       case None =>
         import org.apache.spark.sql.types._
         s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -558,10 +540,10 @@ object StreamOps {
     try {
       if (changes.isEmpty) ()
       else {
-        // base = largest completed generation BELOW this id — identical
+        // base = newest committed generation BELOW this id — identical
         // on a replay because retention never trims the replay window
-        val base = completedGens(snapDir).filter(_ < id).lastOption
-          .map(g => s.read.parquet(s"$snapDir/gen=$g"))
+        val base = graft.AtRest.committedTicks(snapDir).filter(_ < id).lastOption
+          .map(g => graft.AtRest.ticksRelation(s, snapDir, Seq(g)))
         val merged = base match {
           case None =>
             changes.select(col("key"), col("new_bal").as("bal"))
@@ -572,14 +554,11 @@ object StreamOps {
               .select(col("key"),
                 coalesce(col("new_bal"), col("bal")).as("bal"))
         }
-        merged.write.mode("overwrite").parquet(s"$snapDir/gen=$id")
-        // retention: keep the newest `retain` (min 2) completed gens —
-        // time-travel points, bounded
-        val keep = completedGens(snapDir).takeRight(math.max(retain, 2)).toSet
-        Option(new java.io.File(snapDir).listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("gen=") &&
-            !keep.contains(f.getName.stripPrefix("gen=").toLong))
-          .foreach(graft.AtRest.deleteRecursively)
+        graft.AtRest.writeTick(merged, snapDir, id)
+        // retention: keep the newest `retain` (min 2) committed
+        // generations — time-travel points, bounded
+        val keep = graft.AtRest.committedTicks(snapDir).takeRight(math.max(retain, 2))
+        graft.AtRest.dropTicks(snapDir, keep.head - 1)
       }
     } finally { changes.unpersist(); () }
   }

@@ -67,7 +67,7 @@ class AtRestSpec extends SparkSpec {
     assert(resumed.filter(col("batch_id") === 3L).count() == 1L)
   }
 
-  test("one committed-tick definition: root marker, per-tick markers, a torn tick, a missing tree") {
+  test("one committed-tick definition: a compacted tree, per-tick markers, a torn tick, a missing tree") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_committed").toString
     def tick(dir: String, id: Long, committed: Boolean): Unit = {
@@ -77,11 +77,13 @@ class AtRestSpec extends SparkSpec {
     // (layout, build, committed ids, committed dirs relative to the
     // tree, doc_ids the committed relation reads)
     val layouts: Seq[(String, String => Unit, Seq[Long], Seq[String], Set[Long])] = Seq(
-      ("root marker", { d =>
-        Seq((1L, -1L), (2L, 4L)).toDF("doc_id", "batch_id")
-          .write.partitionBy("batch_id").parquet(d)
-        tick(d, 5L, committed = true)
-      }, Seq(-1L, 4L, 5L), Seq(""), Set(1L, 2L, 5L)),
+      // a tick written after a compaction commits only by its own
+      // marker: the rewritten tree commits nothing beyond its two ticks
+      ("compacted tree", { d =>
+        Seq(0L, 1L, 2L).foreach(tick(d, _, committed = true))
+        AtRest.compactTicks(spark, d, Seq("doc_id"), numFiles = 1)
+        tick(d, 3L, committed = false)
+      }, Seq(-1L, 2L), Seq("batch_id=-1", "batch_id=2"), Set(0L, 1L, 2L)),
       ("per-tick markers", { d =>
         Seq(0L, 1L, 2L).foreach(tick(d, _, committed = true))
       }, Seq(0L, 1L, 2L), Seq("batch_id=0", "batch_id=1", "batch_id=2"), Set(0L, 1L, 2L)),
@@ -103,6 +105,56 @@ class AtRestSpec extends SparkSpec {
     val perTick = s"$base/per-tick_markers"
     assert(AtRest.committedRelation(spark, perTick, except = Some(2L))
       .map(_.as[Long].collect().toSet).contains(Set(0L, 1L)))
+    // the next compaction of the compacted tree folds the fenced tick,
+    // fences the new one, and leaves the torn tick's rows out of history
+    val compacted = s"$base/compacted_tree"
+    tick(compacted, 4L, committed = true)
+    AtRest.compactTicks(spark, compacted, Seq("doc_id"), numFiles = 1)
+    assert(AtRest.committedTicks(compacted) == Seq(-1L, 4L))
+    assert(AtRest.ticksRelation(spark, compacted, Seq(-1L)).as[Long].collect().toSet ==
+      Set(0L, 1L, 2L), "a torn tick was folded into history")
+    assert(!new java.io.File(s"$compacted/batch_id=3").exists, "torn tick carried into the rewrite")
+  }
+
+  /** Three committed ticks (doc_id = tick id) at `dir`. */
+  private def threeTicks(dir: String): Unit = {
+    import spark.implicits._
+    Seq(0L, 1L, 2L).foreach(id => AtRest.writeTick(Seq(Tuple1(id)).toDF("doc_id"), dir, id))
+  }
+
+  test("compactTicks crash between the swap renames: the next reader heals the pre-compaction tree") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_cticks_crash").toString
+    val dir = s"$base/tree"
+    // the finished rewrite, as compactTicks leaves it in `.compact-tmp`:
+    // the same tree compacted elsewhere, then moved into place
+    threeTicks(dir)
+    threeTicks(s"$base/other")
+    AtRest.compactTicks(spark, s"$base/other", Seq("doc_id"), numFiles = 1)
+    assert(new java.io.File(s"$base/other").renameTo(new java.io.File(dir + ".compact-tmp")))
+    // death after `dir → dir.compact-old`, before `tmp → dir`
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".compact-old")),
+      "precondition: simulate crash")
+    // the rewrite carries no root marker, so the backup — fully
+    // committed — is restored and the fold simply runs again
+    assert(AtRest.committedTicks(dir) == Seq(0L, 1L, 2L), "backup not restored")
+    assert(AtRest.committedRelation(spark, dir).map(_.as[Long].collect().toSet)
+      .contains(Set(0L, 1L, 2L)))
+    assert(!new java.io.File(dir + ".compact-old").exists &&
+      !new java.io.File(dir + ".compact-tmp").exists, "temp dirs must be cleaned up")
+    AtRest.compactTicks(spark, dir, Seq("doc_id"), numFiles = 1)
+    assert(AtRest.committedTicks(dir) == Seq(-1L, 2L))
+  }
+
+  test("compactTicks: a stale .compact-tmp tick of an aborted pass is not carried into the rewrite") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_cticks_stale").toString + "/tree"
+    threeTicks(dir)
+    AtRest.writeTick(Seq(Tuple1(99L)).toDF("doc_id"), dir + ".compact-tmp", 7L)
+    AtRest.compactTicks(spark, dir, Seq("doc_id"), numFiles = 1)
+    assert(AtRest.committedTicks(dir) == Seq(-1L, 2L), "stale tick carried into the rewrite")
+    assert(AtRest.committedRelation(spark, dir).map(_.as[Long].collect().toSet)
+      .contains(Set(0L, 1L, 2L)))
   }
 
   test("compactTicks folds only committed ticks: a torn tick is neither folded, fenced nor kept") {
@@ -115,8 +167,7 @@ class AtRestSpec extends SparkSpec {
     val got = spark.read.parquet(dir)
       .select(col("a_id"), col("batch_id").cast("long")).as[(Long, Long)].collect().toSet
     // ticks 0-1 fold, the newest COMMITTED tick (2) stays fenced, and the
-    // torn tick's rows appear nowhere: the rewritten tree's root marker
-    // would otherwise commit them (its batch replays and rewrites them)
+    // torn tick's rows appear nowhere (its batch replays and rewrites them)
     assert(got == Set((0L, -1L), (1L, -1L), (2L, 2L)), got)
     assert(!new java.io.File(s"$dir/batch_id=3").exists, "torn tick carried into the rewrite")
   }

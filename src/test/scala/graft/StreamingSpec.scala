@@ -774,12 +774,12 @@ class StreamingSpec extends SparkSpec {
         "delete-then-reinsert must resurrect the key with the new value")
       // TIME TRAVEL: the retained previous generation is exactly the
       // fold of the ticks up to it
-      val gens = StreamOps.completedGens(snapDir)
+      val gens = AtRest.committedTicks(snapDir)
       assert(gens.size >= 2 && gens.size <= 3, s"retention out of bounds: $gens")
       var m2 = Map.empty[Long, Double]
       (t1 ++ t2).sortBy(_._3).foreach { case (k, v, _) =>
         m2 = if (v < 0 && m2.contains(k)) m2 - k else m2 + (k -> v) }
-      val prev = spark.read.parquet(s"$snapDir/gen=${gens(gens.size - 2)}").collect()
+      val prev = AtRest.ticksRelation(spark, snapDir, Seq(gens(gens.size - 2))).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(prev == m2, "previous generation is not the as-of snapshot")
       // REPLAY: re-invoke the last tick verbatim (at-least-once retry) —
@@ -788,7 +788,7 @@ class StreamingSpec extends SparkSpec {
       val replayed = StreamOps.snapshot(spark, snapDir).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(replayed == m, "replayed tick changed the snapshot")
-      assert(StreamOps.completedGens(snapDir) == gens, "replay altered the generation chain")
+      assert(AtRest.committedTicks(snapDir) == gens, "replay altered the generation chain")
     } finally q.stop()
   }
 }

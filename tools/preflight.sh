@@ -45,10 +45,11 @@ if grep -rnE 'registerTimer|deleteTimer' src/main/scala/graft/streaming \
   echo "event-time timer outside EventTimeBuffer/CorrelatorV2/TemporalJoin (listed above)" >&2
   exit 1
 fi
-# One tick-tree layout: the `batch_id=<id>` tick directories and the
-# `_SUCCESS` commit marker are named in src/main only by AtRest, which
-# owns the tick write, the committed-tick set and the replay fence.
-if grep -rnE '"[^"]*(batch_id=|_SUCCESS)[^"]*"' src/main \
+# One tick-tree layout: the `batch_id=<id>` tick directories, the
+# `_SUCCESS` commit marker and hand-rolled `gen=<id>` generation chains
+# are named in src/main only by AtRest, which owns the tick write, the
+# committed-tick set and the replay fence.
+if grep -rnE '"[^"]*(batch_id=|_SUCCESS|gen=)[^"]*"' src/main \
     | grep -vE '^src/main/scala/graft/AtRest\.scala:'; then
   echo "tick-tree layout literal outside AtRest.scala (listed above)" >&2
   exit 1
